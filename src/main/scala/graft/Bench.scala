@@ -21,23 +21,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val tStart = System.nanoTime()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      // Static conf, default 100: at 145 catalog queries x several
-      // generated classes each, a 100-entry codegen cache evicts the
-      // whole working set every round and re-Janino-compiles the entire
-      // catalog per round (the round-11 "+25-40% drift on trivial
-      // queries" as the catalog grew). Size it to hold the catalog.
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.create("graft-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     // JVM/codegen warmup outside the timings (driver measures wall
@@ -178,15 +162,21 @@ object Bench {
     try {
       val p = java.nio.file.Paths.get("scripts/canary_ref.json")
       if (!java.nio.file.Files.exists(p)) None
-      else {
-        val txt = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-        val ref = """"canary_ref"\s*:\s*([0-9.]+)""".r
-          .findFirstMatchIn(txt).map(_.group(1).toDouble)
-        val tag = """"workload"\s*:\s*"([^"]+)"""".r
-          .findFirstMatchIn(txt).map(_.group(1))
-        for (r <- ref; t <- tag) yield (r, t)
-      }
+      else parseCanaryRef(new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
     } catch { case _: Throwable => None }
+
+  /** (canary_ref, workload) from a canary_ref.json's text. The
+    * reference is a JSON number (exponents included); a missing tag,
+    * a malformed number or a reference <= 0 gives None, since a zero
+    * reference would fire the tripwire on every run.
+    */
+  private[graft] def parseCanaryRef(txt: String): Option[(Double, String)] = {
+    val ref = """"canary_ref"\s*:\s*(-?(?:0|[1-9][0-9]*)(?:\.[0-9]+)?(?:[eE][+-]?[0-9]+)?)\s*[,}]""".r
+      .findFirstMatchIn(txt).map(_.group(1).toDouble).filter(_ > 0.0)
+    val tag = """"workload"\s*:\s*"([^"]+)"""".r
+      .findFirstMatchIn(txt).map(_.group(1))
+    for (r <- ref; t <- tag) yield (r, t)
+  }
 
   private def median(xs: List[Double]): Double = xs match {
     case Nil => 0.0

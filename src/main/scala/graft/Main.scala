@@ -51,18 +51,13 @@ object Main {
   def main(args: Array[String]): Unit = {
     val (action, flags) = parse(args)
     // reuse a live session (tests, spark-submit with one built) and
-    // leave its lifecycle to its owner; stop only what we created
-    val preExisting = SparkSession.getDefaultSession.isDefined
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .appName(s"graft-$action")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // leave its settings and lifecycle to its owner; stop only what we
+    // created
+    val preExisting = SparkSession.getDefaultSession
+    val spark = preExisting.getOrElse(GraftSession.create(s"graft-$action",
+      master = sys.env.get("SPARK_MASTER")))
     try run(spark, action, flags)
-    finally if (!preExisting) spark.stop()
+    finally if (preExisting.isEmpty) spark.stop()
   }
 
   /** `main` minus session lifecycle — call with an existing session

@@ -134,29 +134,26 @@ object CandleStream {
 
   /** The full live pipeline (reference updater loop, ws/updater.py):
     * WS stream → closed candles → first-write-wins append into the
-    * date-partitioned base table, every `triggerSecs` (reference
-    * UPDATE_FREQUENCY_SECS=10). Exactly-once = checkpoint + the
-    * idempotent ST4 sink policy (re-delivered batches dedupe against
-    * the table). Returns the running query; stop() to shut down.
+    * date-partitioned [[graft.storage.TxTable]], every `triggerSecs`
+    * (reference UPDATE_FREQUENCY_SECS=10). Exactly-once = checkpoint +
+    * the idempotent ST4 sink policy (re-delivered batches dedupe
+    * against the table). Returns the running query; stop() to shut
+    * down.
     *
-    * Scale: each micro-batch appends only to the date partitions its
-    * buckets fall in, and the first-write-wins anti-join reads back
-    * only partitions >= the batch's min date (explicit p_date filter
-    * -> partition pruning), so per-trigger cost tracks the batch, not
-    * the table's age. Long-lived tables still need periodic small-file
-    * compaction (standard for 10s appends).
-    */
-  /** [[runPipeline]] against a [[graft.storage.TxTable]] — the
-    * concurrent-writer-safe form. Each micro-batch stages its files
-    * and append-commits them through the table's transaction log, so
-    * a maintenance rewrite (incremental refresh, compaction —
+    * Concurrent-writer safety: each micro-batch stages its files and
+    * append-commits them through the table's transaction log, so a
+    * maintenance rewrite (incremental refresh, compaction —
     * AggregateMaintenance / TxTable.compact) running at the same
     * moment can never drop the batch's files: rewrites are
     * partition-conflict-checked and retried, appends are
     * never-conflicting (TxLog.scala). First-write-wins (ST4) holds
     * because the anti-join reads the snapshot the commit builds on.
-    * The reference gets this interleaving safety from Postgres MVCC;
-    * plain-parquet [[runPipeline]] remains for single-writer tables.
+    * The reference gets this interleaving safety from Postgres MVCC.
+    *
+    * Scale: each micro-batch appends only to the date partitions its
+    * buckets fall in, and the first-write-wins anti-join reads back
+    * only those partitions, so per-trigger cost tracks the batch, not
+    * the table's age.
     */
   def runPipelineTx(stream: DataFrame, table: graft.storage.TxTable,
                     checkpoint: String, triggerSecs: Int = 10,
@@ -213,52 +210,6 @@ object CandleStream {
           sinceMaintain.set(0)
           table.compact()
           table.vacuum(vacuumRetain)
-        }
-        ()
-      }
-      .start()
-  }
-
-  def runPipeline(stream: DataFrame, tablePath: String, checkpoint: String,
-                  triggerSecs: Int = 10, watermark: String = "1 hour")
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = stream.sparkSession
-    closedCandles(stream, watermark)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(s"$triggerSecs seconds"))
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        import org.apache.spark.sql.functions.{col, count, lit, to_date}
-        // ONE driver action per trigger: row count (empty micro-batches
-        // — watermark-advance ticks — must not write: an empty parquet
-        // append creates a schemaless directory that breaks the next
-        // batch's read-back) and min date (prunes the dedup read to the
-        // dates this batch touches — a 10s trigger must not scan months
-        // of partitions) come from a single aggregation of the raw
-        // batch; dedup can't change either, so `incoming` is consumed
-        // exactly once by the write job and needs no cache.
-        val stats = batch
-          .agg(count(lit(1)).as("n"),
-            org.apache.spark.sql.functions.min(to_date(col("time"))).as("d"))
-          .first()
-        if (stats.getLong(0) > 0L) {
-          val incoming = CandleOps.dedup(batch.toDF())
-          // filesystem-agnostic existence check (java.io.File would
-          // always say false on HDFS/S3 and silently disable dedup)
-          val path = new org.apache.hadoop.fs.Path(tablePath)
-          val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val tableExists = fs.exists(path) &&
-            fs.listStatus(path).exists(_.getPath.getName.startsWith("p_date="))
-          val fresh =
-            if (tableExists) {
-              val existing = spark.read.parquet(tablePath)
-                .filter(col("p_date") >= lit(stats.getDate(1)))
-                .select((CandleOps.keyCols :+ "time").map(col): _*)
-              incoming.join(existing, CandleOps.keyCols :+ "time", "left_anti")
-            } else incoming
-          fresh
-            .withColumn("p_date", to_date(col("time")))
-            .write.partitionBy("p_date").mode("append").parquet(tablePath)
         }
         ()
       }

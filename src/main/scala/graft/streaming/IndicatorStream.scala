@@ -19,7 +19,7 @@ import org.apache.spark.sql.streaming._
   * discipline as [[graft.llm.IncrementalDedup.admitStream]].
   */
 object IndicatorStream {
-  import ExactCandleState.Closed
+  import TwsCandleState.Closed
 
   /** (last applied candle bucket, running EMA). */
   case class EmaState(lastBucketMs: Long, ema: Double)

@@ -3,33 +3,40 @@ package graft.streaming
 import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.streaming._
 
-/** [[ExactCandleState]] re-expressed on `transformWithState` — Spark
-  * 4's arbitrary-state operator (SPARK-46815) and the modern home for
-  * this state machine:
+/** Exact stateful reproduction of the reference updater's
+  * closed-candle semantics (SURVEY ST2/ST3; reference
+  * fetchers/ws/updater.py:150-192) on `transformWithState`, Spark 4's
+  * arbitrary-state operator (SPARK-46815):
   *
-  *  - typed [[MapState]] keyed by bucket instead of one whole-state
-  *    case class re-serialized per update — an update touches ONE
-  *    map entry in RocksDB, which is what keeps a hot key cheap when
-  *    it holds many open buckets;
-  *  - a REAL per-key timer for the 1 h force-flush:
-  *    `GroupStateTimeout.ProcessingTimeTimeout` fires only on key
-  *    INACTIVITY (ANY arriving row re-arms it), while the reference's
-  *    rule measures how long the held candle itself has gone
-  *    unsuperseded (updater.py:30,171-176) — intra-bucket updates to
-  *    the same open candle must NOT extend the hold. A TWS timer is
-  *    an explicit clock: it re-arms only when the LATEST BUCKET
-  *    advances, so a continuously-updated stuck candle still flushes
-  *    at holdMs.
+  *  - per key, 1-minute buckets accumulate updates, the latest message
+  *    (by ts_ms) wins within a bucket (the new_ts >= current_ts guard,
+  *    ws/bitfinex.py:202-217);
+  *  - whenever a newer bucket exists, every older bucket is flushed
+  *    ("insert all except the latest, still-open candle");
+  *  - the newest bucket holds until newer data or the 1 h hold clock
+  *    (DATA_HELD_MLS_THRESHOLD, updater.py:30,171-176) force-flushes it.
   *
-  * Semantics are otherwise [[ExactCandleState.transition]]'s:
-  * latest message per bucket wins, any bucket older than the key's
-  * newest flushes immediately, the newest holds until newer data or
-  * the timer. Requires the RocksDB state store provider
-  * (`spark.sql.streaming.stateStore.providerClass`), the only
+  * State is a typed [[MapState]] keyed by bucket, so an update touches
+  * ONE map entry in RocksDB, which keeps a hot key cheap when it holds
+  * many open buckets. The hold clock is a real per-key timer that
+  * re-arms only when the LATEST BUCKET advances: the reference's rule
+  * measures how long the held candle itself has gone unsuperseded, so
+  * intra-bucket updates to the same open candle must NOT extend the
+  * hold (an inactivity timeout, which any arriving row re-arms, would).
+  *
+  * The watermark version ([[CandleStream.closedCandles]]) is the
+  * declarative production form. Requires the RocksDB state store
+  * provider (`spark.sql.streaming.stateStore.providerClass`), the only
   * provider transformWithState supports.
   */
 object TwsCandleState {
-  import ExactCandleState.{Candle, Closed}
+
+  case class Candle(bucketMs: Long, lastTsMs: Long, open: Double, high: Double,
+                    low: Double, close: Double, volume: Double)
+
+  case class Closed(time_ms: Long, exchange: String, base_id: String,
+                    quote_id: String, open: Double, high: Double, low: Double,
+                    close: Double, volume: Double)
 
   /** (bucket the hold clock is armed for, the timer's timestamp). */
   case class Armed(bucketMs: Long, timerTs: Long)
@@ -119,8 +126,11 @@ object TwsCandleState {
     }
   }
 
-  /** Streaming entry point; `holdMs <= 0` disables the force-flush
-    * timer (same test-drain rationale as [[ExactCandleState]]).
+  /** Streaming entry point. `holdMs <= 0` disables the force-flush
+    * timer (TimeMode.None): with a processing-time timer the engine
+    * keeps scheduling batches to check it, which is correct in
+    * production but makes processAllAvailable-style test drains spin;
+    * the timer branch itself is unit-tested through a fake handle.
     */
   def closedCandles(ds: Dataset[WsCandle], holdMs: Long = 3600000L): Dataset[Closed] = {
     implicit val closedEnc: org.apache.spark.sql.Encoder[Closed] = Encoders.product[Closed]

@@ -7,14 +7,7 @@ import org.scalatest.BeforeAndAfterAll
 /** Shared local SparkSession for all specs (one JVM per `sbt test` fork). */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val s = GraftSession.create("graft-test", cpus = 4)
     s.sparkContext.setLogLevel("WARN")
     s
   }

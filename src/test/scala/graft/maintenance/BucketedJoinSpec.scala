@@ -33,6 +33,7 @@ class BucketedJoinSpec extends SparkSpec {
     val joined = spark.table("b_ohlcvs")
       .join(spark.table("b_latest"), Seq("exchange", "base_id", "quote_id"))
     // disable broadcast so the join strategy itself is under test
+    val priorThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val plan = joined.queryExecution.executedPlan.toString()
@@ -40,7 +41,7 @@ class BucketedJoinSpec extends SparkSpec {
       assert(!plan.contains("Exchange"), s"bucketed join must not shuffle:\n$plan")
       assert(joined.count() == fx.count()) // 1:1 per row with its key's latest
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10MB")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", priorThreshold)
       spark.sql("DROP TABLE IF EXISTS b_ohlcvs")
       spark.sql("DROP TABLE IF EXISTS b_latest")
     }

@@ -70,39 +70,6 @@ class CandleStreamSpec extends SparkSpec {
       .first().getAs[Double]("close") == 555.0)
   }
 
-  test("runPipeline: stream -> partitioned table; idempotent across query instances") {
-    implicit val sc = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("pipe").toFile.getAbsolutePath
-    val table = s"$dir/ohlcvs"
-    val ckpt = s"$dir/ckpt"
-
-    val in = MemoryStream[WsCandle]
-    val q = CandleStream.runPipeline(in.toDF(), table, ckpt, triggerSecs = 1, watermark = "2 minutes")
-    try {
-      in.addData(ws(0, 100.0, 1.0), ws(30000, 102.0, 2.0), ws(240000, 110.0, 5.0))
-      q.processAllAvailable()
-      val t1 = spark.read.parquet(table)
-      assert(t1.count() == 1) // 13:45 closed; 13:49 still open
-      assert(t1.first().getAs[Double]("close") == 102.0)
-    } finally q.stop()
-
-    // a second query instance (fresh checkpoint/state) re-delivering an
-    // overlapping bucket: the table-level anti-join must keep the sink
-    // idempotent regardless of streaming state
-    val in2 = MemoryStream[WsCandle]
-    val q2 = CandleStream.runPipeline(in2.toDF(), table, ckpt + "2", triggerSecs = 1, watermark = "2 minutes")
-    try {
-      in2.addData(ws(5000, 999.0, 9.0), ws(300000, 120.0, 7.0)) // dup bucket + newer
-      q2.processAllAvailable()
-      val t2 = spark.read.parquet(table)
-      // re-sent 13:45 closes again but the anti-join drops it (first
-      // write wins); 13:50 stays open -> table unchanged
-      assert(t2.count() == 1)
-      assert(t2.filter(col("time") === timestamp_millis(lit(t0)))
-        .first().getAs[Double]("close") == 102.0, "first write must win across restarts")
-    } finally q2.stop()
-  }
-
   test("runPipelineTx: tx-log sink stays idempotent and survives a concurrent compaction") {
     implicit val sc = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("pipetx").toFile.getAbsolutePath
@@ -112,7 +79,8 @@ class CandleStreamSpec extends SparkSpec {
     val q = CandleStream.runPipelineTx(in.toDF(), table, s"$dir/ckpt",
       triggerSecs = 1, watermark = "2 minutes")
     try {
-      in.addData(ws(0, 100.0, 1.0), ws(240000, 110.0, 5.0)) // 13:45 closes
+      // two updates of 13:45 (the later wins), then 13:49 closes it
+      in.addData(ws(0, 100.0, 1.0), ws(30000, 102.0, 2.0), ws(240000, 110.0, 5.0))
       q.processAllAvailable()
       assert(table.read().count() == 1)
       // maintenance rewrite between micro-batches — the scenario plain
@@ -123,7 +91,7 @@ class CandleStreamSpec extends SparkSpec {
       val t1 = table.read()
       assert(t1.count() == 2, "append after rewrite must land")
       assert(t1.filter(col("time") === timestamp_millis(lit(t0)))
-        .first().getAs[Double]("close") == 100.0)
+        .first().getAs[Double]("close") == 102.0, "latest update wins in bucket")
     } finally q.stop()
 
     // fresh query instance re-delivers an overlapping bucket: the
@@ -135,8 +103,11 @@ class CandleStreamSpec extends SparkSpec {
       in2.addData(ws(5000, 999.0, 9.0), ws(360000, 130.0, 8.0))
       q2.processAllAvailable()
       val t2 = table.read()
+      // re-sent 13:45 closes again but the anti-join drops it; 13:51
+      // stays open -> table unchanged
+      assert(t2.count() == 2)
       assert(t2.filter(col("time") === timestamp_millis(lit(t0)))
-        .first().getAs[Double]("close") == 100.0, "first write must win across restarts")
+        .first().getAs[Double]("close") == 102.0, "first write must win across restarts")
     } finally q2.stop()
   }
 }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   */
 class IndicatorStreamSpec extends SparkSpec {
   import graft.SparkSpec.spark.implicits._
-  import ExactCandleState.Closed
+  import TwsCandleState.Closed
 
   private val t0 = 1629294300000L
 

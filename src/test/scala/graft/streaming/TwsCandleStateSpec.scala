@@ -4,10 +4,9 @@ import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-/** [[TwsCandleState]] — the transformWithState form of the exact
-  * candle state machine, driven end-to-end through RocksDB (the only
-  * provider the operator supports). Asserts parity with
-  * [[ExactCandleState]]'s semantics on the same message sequence.
+/** [[TwsCandleState]] — the exact candle state machine, driven
+  * end-to-end through RocksDB (the only provider transformWithState
+  * supports) and, for the hold clock, through a fake handle.
   */
 class TwsCandleStateSpec extends SparkSpec {
   import graft.SparkSpec.spark.implicits._
@@ -147,8 +146,7 @@ class TwsCandleStateSpec extends SparkSpec {
 
   test("hold clock: re-arms only when the latest bucket advances; expiry flushes held state") {
     // the timer branch is driven directly through a fake handle —
-    // deterministic, no processing-time spin (same rationale as
-    // ExactCandleState's TestGroupState tests)
+    // deterministic, no processing-time spin
     val h = new TwsTestHandle
     val proc = new TwsCandleState.CandleProcessor(holdMs = 3600000L)
     proc.setHandle(h)

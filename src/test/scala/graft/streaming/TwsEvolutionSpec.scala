@@ -16,7 +16,7 @@ import org.apache.spark.sql.streaming._
   */
 class TwsEvolutionSpec extends SparkSpec {
   import graft.SparkSpec.spark.implicits._
-  import ExactCandleState.Closed
+  import TwsCandleState.Closed
 
   private val t0 = 1629294300000L // minute-aligned
 
@@ -92,7 +92,7 @@ case class CandleV2(bucketMs: Long, lastTsMs: Long, open: Double, high: Double,
   * [[TwsCandleState.CandleProcessor]] with the counter folded in.
   */
 class ProcessorV2
-    extends StatefulProcessor[(String, String, String), WsCandle, ExactCandleState.Closed] {
+    extends StatefulProcessor[(String, String, String), WsCandle, TwsCandleState.Closed] {
   @transient private var buckets: MapState[Long, CandleV2] = _
   @transient private var armed: ValueState[TwsCandleState.Armed] = _
 
@@ -103,13 +103,13 @@ class ProcessorV2
       Encoders.product[TwsCandleState.Armed], TTLConfig.NONE)
   }
 
-  private def emit(key: (String, String, String), c: CandleV2): ExactCandleState.Closed =
-    ExactCandleState.Closed(c.bucketMs, key._1, key._2, key._3, c.open, c.high, c.low,
+  private def emit(key: (String, String, String), c: CandleV2): TwsCandleState.Closed =
+    TwsCandleState.Closed(c.bucketMs, key._1, key._2, key._3, c.open, c.high, c.low,
       c.close, c.volume)
 
   override def handleInputRows(key: (String, String, String),
                                rows: Iterator[WsCandle],
-                               timerValues: TimerValues): Iterator[ExactCandleState.Closed] = {
+                               timerValues: TimerValues): Iterator[TwsCandleState.Closed] = {
     rows.foreach { w =>
       val b = w.ts_ms / 60000L * 60000L
       val prev = Option(buckets.getValue(b))

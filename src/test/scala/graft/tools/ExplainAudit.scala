@@ -1,16 +1,11 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 /** Prints formatted plans for representative queries — the scale
   * checklist: PushedFilters reach the scan, dims broadcast, partial
   * aggregation before shuffles, WholeStageCodegen coverage.
   */
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.create("graft-explain-audit")
     spark.sparkContext.setLogLevel("ERROR")
     val d = "/root/testdata/sf0.01"
     val names = if (args.nonEmpty) args.toSeq

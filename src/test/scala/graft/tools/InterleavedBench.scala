@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Interleaved Spark-vs-DuckDB catalog bench (r17 verdict item 5):
   * within every round, each query runs on BOTH engines back to back
   * (Spark noop sink, then the DuckDB oracle via a persistent
@@ -23,18 +21,7 @@ object InterleavedBench {
     val sfDir = sys.env.getOrElse("IB_SF_DIR", "/root/testdata/sf0.1")
     val rounds = sys.env.getOrElse("IB_ROUNDS", "3").toInt
     val outJson = sys.env.getOrElse("IB_JSON", "/tmp/bench_interleaved.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench-interleaved")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.create("graft-bench-interleaved")
     spark.sparkContext.setLogLevel("ERROR")
 
     // the timer subprocess needs the CURRENT oracle catalog; an

@@ -4,7 +4,6 @@ import graft.api.OhlcvReader
 import graft.core.OhlcvFixture
 import graft.maintenance.AggregateMaintenance
 import graft.streaming.CandleStream
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end demo of the OHLCV domain layer through its public API —
@@ -14,10 +13,7 @@ import org.apache.spark.sql.functions._
   */
 object OhlcvDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.create("graft-ohlcv-demo")
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 
@@ -64,9 +60,11 @@ object OhlcvDemo {
     println(s"[demo] backfill: candles=${table.count()} errors=${errs.count()}")
     errs.select("exchange", "symbol", "exception_message").show(2, truncate = false)
 
-    // exact stateful closed-candle stream
+    // exact stateful closed-candle stream (transformWithState needs RocksDB)
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val in2 = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[graft.streaming.WsCandle]
-    val q2 = graft.streaming.ExactCandleState.closedCandles(in2.toDS(), holdMs = 0L)
+    val q2 = graft.streaming.TwsCandleState.closedCandles(in2.toDS(), holdMs = 0L)
       .writeStream.format("memory").queryName("demo_exact").outputMode("append").start()
     in2.addData(
       graft.streaming.WsCandle(1629294300000L, "bitfinex", "BTC", "USD", 100, 101, 99, 100.5, 1.0),

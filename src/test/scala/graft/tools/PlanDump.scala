@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Writes `.explain("formatted")` output for named catalog queries to
   * files: PD_NAMES=a,b PD_OUT=/root/repo/plans/r17 [PD_SUFFIX=before]
   * [PD_DIR=/root/testdata/sf0.1]. One file per query:
@@ -10,13 +8,7 @@ import org.apache.spark.sql.SparkSession
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.create("graft-plan-dump")
     spark.sparkContext.setLogLevel("ERROR")
     val names = sys.env.getOrElse("PD_NAMES", "").split(",").filter(_.nonEmpty)
     require(names.nonEmpty, "PD_NAMES=a,b required")

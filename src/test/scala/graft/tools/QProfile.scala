@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Per-query job/stage profiler (optimization-guide §1 applied to a
   * UI-less local bench): QP_NAMES=a,b [QP_DIR=...] [QP_WARM=1].
@@ -18,14 +17,7 @@ object QProfile {
   case class JobRec(id: Int, wallMs: Long, stages: Seq[Int])
 
   def main(args: Array[String]): Unit = {
-    val s = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val s = graft.GraftSession.create("graft-qprofile")
     s.sparkContext.setLogLevel("ERROR")
     val names = sys.env.getOrElse("QP_NAMES", "").split(",").filter(_.nonEmpty)
     require(names.nonEmpty, "QP_NAMES=a,b required")

@@ -368,30 +368,21 @@ object ScaleBench {
     val queries = if (subset.isEmpty) all else all.filter(subset.contains)
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val bigDir  = s"/tmp/graft_sfx$factor"
-    val cpus    = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scale-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus    = graft.GraftSession.cpus()
+    val spark = graft.GraftSession.create("graft-scale-bench", cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     if (!new java.io.File(s"$bigDir/documents.parquet").exists()) {
       replicateDocs(spark.read.parquet(s"$baseDir/documents.parquet"), factor)
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(s"$bigDir/documents.parquet")
       replicateEmbeddings(spark.read.parquet(s"$baseDir/embeddings.parquet"), factor)
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(s"$bigDir/embeddings.parquet")
     }
     if (!new java.io.File(s"$bigDir/events.parquet").exists())
       replicateEvents(spark.read.parquet(s"$baseDir/events.parquet"), factor)
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(s"$bigDir/events.parquet")
 
     // warmup (classloading/codegen) outside the timings
