@@ -184,14 +184,11 @@ object Main {
     (flags.get("jdbc-url"), flags.get("table")) match {
       case (Some(url), _) =>
         JdbcCandleSink.write(candles, url, flags.getOrElse("jdbc-table", "ohlcvs"),
-          JdbcColumns, JdbcKeys, JdbcCandleSink.Mode.InsertIgnore,
+          JdbcColumns, CandleKeys, JdbcCandleSink.Mode.InsertIgnore,
           dialect(url))
       case (None, Some(tableRoot)) =>
-        val t = new TxTable(spark, tableRoot)
-        val withDate = candles.withColumn("p_date", to_date(col("time")))
-        if (t.version < 0) t.append(withDate)
-        else t.insertIgnore(withDate,
-          Seq("exchange", "base_id", "quote_id", "time"))
+        new TxTable(spark, tableRoot).insertIgnore(
+          candles.withColumn("p_date", to_date(col("time"))), CandleKeys)
       case _ => fail("backfill needs --table <txtable-root> or --jdbc-url <url>")
     }
     // ohlcvs_errors side-channel (S10) — append-only parquet
@@ -211,14 +208,15 @@ object Main {
     }
 
   /** The reference's ohlcvs column/key shape for the JDBC sink
-    * (fetchers/config/queries.py:4-15 conflict targets).
+    * (fetchers/config/queries.py:4-15 conflict targets); the key is
+    * also the TxTable sinks' conflict key.
     */
   private val JdbcColumns = Seq(
     "time" -> "TIMESTAMP", "exchange" -> "VARCHAR(100)",
     "base_id" -> "VARCHAR(20)", "quote_id" -> "VARCHAR(20)",
     "open" -> "DOUBLE", "high" -> "DOUBLE", "low" -> "DOUBLE",
     "close" -> "DOUBLE", "volume" -> "DOUBLE")
-  private val JdbcKeys = Seq("exchange", "base_id", "quote_id", "time")
+  private val CandleKeys = Seq("exchange", "base_id", "quote_id", "time")
 
   private def dialect(url: String): JdbcCandleSink.Dialect =
     if (url.startsWith("jdbc:derby")) JdbcCandleSink.DerbyDialect
@@ -272,8 +270,7 @@ object Main {
     * end − 4 min, update=True): every `--interval-secs` it re-fetches
     * the trailing five COMPLETE minutes [floor(now)−5m, floor(now))
     * and upserts them DO-UPDATE-style into the TxTable via the
-    * surgical [[TxTable.mergeInto]] — the transactional form of
-    * [[graft.streaming.CandleStream.reconcile]]'s batch MERGE, so a
+    * surgical [[TxTable.mergeInto]] (ON CONFLICT DO UPDATE), so a
     * re-fetched minute overwrites o/h/l/c/v exactly once and an
     * unchanged refetch is idempotent.
     *
@@ -302,11 +299,8 @@ object Main {
       val fetcher = fetcherFor(exchange, page, asOfMs = endMs)
       val tasks = tasksFor(spark, exchange, keys, startMs, endMs)
       val (candles, errors) = Backfill.run(tasks, fetcher)
-      val t = new TxTable(spark, tableRoot)
-      val withDate = graft.ops.CandleOps.dedup(candles)
-        .withColumn("p_date", to_date(col("time")))
-      if (t.version < 0) t.append(withDate)
-      else t.mergeInto(withDate, Seq("exchange", "base_id", "quote_id", "time"))
+      new TxTable(spark, tableRoot).mergeInto(graft.ops.CandleOps.dedup(candles)
+        .withColumn("p_date", to_date(col("time"))), CandleKeys)
       val errDir = flags.getOrElse("errors", tableRoot + "_errors")
       errors.write.mode("append").parquet(errDir)
       i += 1
@@ -321,7 +315,7 @@ object Main {
 
   /** `<action> [--flag value]...` — argparse-shaped failures. */
   private[graft] def parse(args: Array[String]): (String, Map[String, String]) = {
-    if (args.isEmpty) fail("usage: graft.Main <backfill|stream> [--flag value]...")
+    if (args.isEmpty) fail("usage: graft.Main <backfill|stream|repair|curate> [--flag value]...")
     val action = args.head
     val flags = scala.collection.mutable.Map.empty[String, String]
     var i = 1

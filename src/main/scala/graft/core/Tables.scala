@@ -69,15 +69,7 @@ object Tables {
     * a CPU-bound kernel over an in-memory source should repartition
     * explicitly.
     */
-  /** A/B kill switch for perf experiments ONLY (SPARK_GRAFT_NO_FANOUT
-    * =1 makes every fanOut an identity) — never set in production;
-    * exists so bench A/Bs of the fan can run without code edits.
-    */
-  private val fanDisabled: Boolean =
-    sys.env.get("SPARK_GRAFT_NO_FANOUT").contains("1")
-
   def fanOut(df: DataFrame): DataFrame = {
-    if (fanDisabled) return df
     val spark = df.sparkSession
     val target = spark.sparkContext.defaultParallelism
     estimatedScanSplits(df) match {

@@ -86,13 +86,4 @@ object Backfill {
         lit("FetchError").as("exception_class"), col("error").as("exception_message"))
     (candles, errors)
   }
-
-  /** Full job: tasks → fetch → dedup → first-write-wins append into
-    * the existing table (ST4 policy); errors to the error sink.
-    */
-  def backfillInto(existing: DataFrame, tasks: DataFrame,
-                   fetcher: Fetcher): (DataFrame, DataFrame) = {
-    val (candles, errors) = run(tasks, fetcher)
-    (CandleOps.insertIgnore(existing, candles), errors)
-  }
 }

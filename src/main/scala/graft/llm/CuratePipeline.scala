@@ -80,8 +80,7 @@ object CuratePipeline {
                    profile: Option[TxTable] = None): Unit = {
     val bad = batch.filter(col("is_corrupt"))
       .select(col("raw_line"), lit("errors").as("p_date"))
-    if (errors.version < 0) errors.append(bad)
-    else errors.insertIgnore(bad, Seq("raw_line"))
+    errors.insertIgnore(bad, Seq("raw_line"))
     val clean = batch.filter(!col("is_corrupt"))
       .filter(QualityRules.okWordCount(size(TextOps.words(col("text")))))
     val before = sink.version

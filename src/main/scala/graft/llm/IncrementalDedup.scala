@@ -271,29 +271,21 @@ object IncrementalDedup {
     // double as the checkpoint the returned join reads
     // (insertIgnoreReturning — one materialization instead of
     // checkpoint-store + stage-read, and no lazy checkpoint left to
-    // race under AQE). The empty-state path IS the prepared kernel's
-    // eager checkpoint already — no second barrier. Interleaved A/B
-    // (IncDedupProbe6, 10 rounds, sf0.1): WALL-NEUTRAL (medians
+    // race under AQE). Interleaved A/B (IncDedupProbe6, 10 rounds,
+    // sf0.1): WALL-NEUTRAL (medians
     // 2.54 vs 2.55 s, 26→25 jobs) — the checkpoint job was fully
     // hidden under concurrent protocol work at this size; the win is
     // one fewer pass of the admission lineage in CPU and no pinned
     // executor copy, which is what matters on a busy cluster. (A
     // coalesce(4) of the stage write was A/B'd alongside and was
-    // also a wash: renames are not the floor on this fs.)
-    val admitted =
-      if (state.version < 0) {
-        val folded = admittedRaw.select(
-          (col("doc_id") +: col("digest") +: sigCols.map(col)) :+ lit(date).as("p_date"): _*)
-        state.append(folded)
-        admittedRaw
-      } else {
-        val folded = admittedRaw.select(
-          (col("doc_id") +: col("digest") +: sigCols.map(col)) :+ lit(date).as("p_date"): _*)
-        // the partition is the literal stamped two lines up — no
-        // touchedPartitions job on the commit hot path
-        state.insertIgnoreReturning(folded, Seq("doc_id"),
-          knownParts = Some(Set(date)))._2
-      }
+    // also a wash: renames are not the floor on this fs.) The
+    // partition is the literal stamped here — no touchedPartitions job
+    // on the commit hot path; an empty state takes the whole admission
+    // as its first commit.
+    val admitted = state.insertIgnoreReturning(
+      admittedRaw.select(
+        (col("doc_id") +: col("digest") +: sigCols.map(col)) :+ lit(date).as("p_date"): _*),
+      Seq("doc_id"), knownParts = Some(Set(date)))._2
     if (withDigest)
       p.docs.join(admitted.select(col("doc_id"), col("digest")), Seq("doc_id"))
         .select(col("doc_id"), col("text"), col("digest"))
@@ -371,8 +363,7 @@ object IncrementalDedup {
     admit(state, batch, id, text, date, k, bandsOf, threshold, bands, digests)
     // recovery-safe delivery: admitted-by-ANY-attempt, not by this one.
     val delivered = docs.join(state.read().select(col("doc_id")), Seq("doc_id"))
-    if (sink.version < 0) sink.append(delivered)
-    else sink.insertIgnore(delivered, Seq("doc_id"))
+    sink.insertIgnore(delivered, Seq("doc_id"))
   }
 
   /** (doc_id, digest, __sig) — `__sig` the k-component minhash

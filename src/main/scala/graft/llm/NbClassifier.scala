@@ -63,9 +63,9 @@ object NbClassifier {
     * scan for priors, no third for the total. Everything downstream
     * (class totals, vocabulary size, priors) aggregates the
     * |vocab|·|classes|-bounded model frame, never the corpus — as ONE
-    * rollup over it, collected: the per-label groups carry the token
-    * totals and doc counts, the grand-total group carries the global
-    * doc count (for priors) and the distinct vocabulary size, so the
+    * collected job over it: the per-label groups carry the token
+    * totals and doc counts, a grand-total row carries the global doc
+    * count (for priors) and the distinct vocabulary size, so the
     * former class-stats aggregation + global window + separate
     * vocabulary job collapse into a single model-frame job at fit
     * time.
@@ -81,11 +81,16 @@ object NbClassifier {
     val tokenCounts = counts.filter(col("w").isNotNull)
     val labelType = counts.schema("label").dataType
     val spark = counts.sparkSession
-    val agg = counts.rollup(col("label"))
-      .agg(sum(when(col("w").isNotNull, col("c")).otherwise(0L)).as("tot"),
-        sum(when(col("w").isNull, col("c")).otherwise(0L)).as("n_docs"),
-        count_distinct(col("w")).as("vd"),
-        grouping(col("label")).as("g"))
+    // (label, tot, n_docs, vd, g): per-label rows (g = 0) plus the grand
+    // total (g = 1), the only one whose distinct vocabulary `vd` is read
+    val stats = Seq(
+      sum(when(col("w").isNotNull, col("c")).otherwise(0L)).as("tot"),
+      sum(when(col("w").isNull, col("c")).otherwise(0L)).as("n_docs"))
+    val agg = counts.groupBy(col("label"))
+      .agg(stats.head, stats(1), lit(null).cast("long").as("vd"), lit(0.toByte).as("g"))
+      .unionByName(counts
+        .agg(stats.head, stats(1), count_distinct(col("w")).as("vd"), lit(1.toByte).as("g"))
+        .withColumn("label", lit(null).cast(labelType)))
       .collect()
     val total = agg.filter(_.getByte(4) == 1.toByte)
     val (nTotal, vocab) = total.headOption

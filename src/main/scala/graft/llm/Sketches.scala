@@ -273,9 +273,11 @@ object Sketches {
   }
 
   /** Bloom filter per group over a (group, value) frame, as (g, w,
-    * bits) rows: 32-bit words (bit index < 32 keeps every shift
-    * engine-portable — no 1<<63 sign/overflow divergence), built in
-    * ONE map-side-combined bit_or pass. Words with no set bits have
+    * bits, h, bits_log2) rows: 32-bit words (bit index < 32 keeps
+    * every shift engine-portable — no 1<<63 sign/overflow
+    * divergence), built in ONE map-side-combined bit_or pass, each
+    * row carrying the build's `h` and `bitsLog2` so a probe can
+    * refuse a sketch built differently. Words with no set bits have
     * no row. State ≤ 2^bitsLog2/32 rows per group regardless of
     * corpus size; words OR-merge across partitions/days like the HLL
     * registers; the whole sketch broadcasts (2^24 bits = 2 MiB
@@ -295,6 +297,7 @@ object Sketches {
         expr("shiftleft(CAST(1 AS BIGINT), CAST(p % 32 AS INT))").as("m"))
       .groupBy(col("g"), col("w"))
       .agg(bit_or(col("m")).as("bits"))
+      .select(col("g"), col("w"), col("bits"), lit(h).as("h"), lit(bitsLog2).as("bits_log2"))
 
   /** Membership probe against a [[bloomBuild]] sketch: (g, carry...,
     * key, maybe) — `maybe` true iff ALL `h` probed bits are set (and
@@ -348,13 +351,14 @@ object Sketches {
     require(bitsLog2 >= 6 && bitsLog2 <= 24,
       s"bloomMightContain: bitsLog2 must be in [6,24], got $bitsLog2")
     val nWords = 1 << (bitsLog2 - 5)
-    val rows = sketch.select(col("g"), col("w"), col("bits")).collect().toSeq
-    rows.foreach { r =>
-      val w = r.getLong(1)
-      require(w >= 0 && w < nWords,
-        s"bloomMightContain: sketch word index $w is outside [0, $nWords) " +
-          s"for bitsLog2=$bitsLog2 — the sketch was built with a different " +
-          "bitsLog2 than this probe")
+    val rows = sketch.select(col("g"), col("w"), col("bits"), col("h"), col("bits_log2"))
+      .collect().toSeq
+    // a larger probe than the build reads bits it never set (false
+    // negatives); a smaller one indexes outside its words
+    rows.map(r => (r.getInt(3), r.getInt(4))).distinct.foreach { case (bh, bb) =>
+      require(bh == h && bb == bitsLog2,
+        s"bloomMightContain: the sketch was built with different parameters " +
+          s"(h=$bh, bitsLog2=$bb) than this probe (h=$h, bitsLog2=$bitsLog2)")
     }
     val dense: Seq[(Any, Array[Long])] = rows
       .groupBy(_.get(0)).map { case (gv, rs) =>

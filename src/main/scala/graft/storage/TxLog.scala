@@ -39,9 +39,13 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *    same protocol). Checkpoints are derived data: any committer may
   *    (re)write one, contents are deterministic for a version, and
   *    losing the race is harmless.
-  *  - Appends never conflict: on CAS failure the writer re-reads the
-  *    latest snapshot and re-commits its (already staged) files on
-  *    top.
+  *  - Plain appends never conflict (and check no keys): on CAS
+  *    failure the writer re-reads the latest snapshot and re-commits
+  *    its (already staged) files on top.
+  *  - Keyed writes ([[TxTable.insertIgnore]], [[TxTable.mergeInto]])
+  *    conflict-check against the snapshot their anti-join read, from
+  *    an uncommitted table's first commit on, so two writers of one
+  *    key can never both win.
   *  - Partition rewrites (refresh / upsert / compaction) are
   *    optimistic: they remember the snapshot they read, and the
   *    commit fails with [[TxConflictException]] if any intervening
@@ -427,36 +431,8 @@ class TxTable(val spark: SparkSession, val root: String,
     * under a fresh commit directory; returns the file list for a
     * commit. The files are invisible to readers until committed.
     */
-  private[storage] def stage(df: DataFrame): Seq[TxFile] = {
-    val uuid = java.util.UUID.randomUUID().toString
-    val staging = s"$root/_staging/$uuid"
-    df.write.partitionBy(partitionCol).mode("overwrite").parquet(staging)
-    // move into the canonical data/<part>=<v>/ layout (uniform depth,
-    // so the snapshot reader's partition discovery sees one structure);
-    // the uuid-prefixed name keeps every committed file unique forever,
-    // and nothing here is visible to readers until the manifest commit.
-    val out = scala.collection.mutable.ArrayBuffer.empty[TxFile]
-    val it = fs.listFiles(new org.apache.hadoop.fs.Path(staging), true)
-    while (it.hasNext) {
-      val f = it.next().getPath
-      if (f.getName.endsWith(".parquet")) {
-        val partDir = f.getParent.getName
-        val part = partDir match {
-          case PartitionDirName(_, v) => v
-          case _ => ""
-        }
-        val rel = s"data/$partDir/$uuid-${f.getName}"
-        val dest = new org.apache.hadoop.fs.Path(root, rel)
-        fs.mkdirs(dest.getParent)
-        if (!fs.rename(f, dest))
-          throw new java.io.IOException(s"failed to move staged file $f -> $dest")
-        out += TxFile(rel, part)
-      }
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-    computeStagedStats(out.toSeq)
-    out.toSeq
-  }
+  private[storage] def stage(df: DataFrame): Seq[TxFile] =
+    stageBy(df, None).getOrElse("", Seq.empty)
 
   /** [[stage]]'s fused two-way form: `df` carries `tagCol` (string)
     * alongside `partitionCol`, ONE write job lands partitioned by
@@ -470,45 +446,40 @@ class TxTable(val spark: SparkSession, val root: String,
     * directories of one partition.
     */
   private[storage] def stageSplit(df: DataFrame, tagCol: String)
-      : Map[String, Seq[TxFile]] = {
+      : Map[String, Seq[TxFile]] = stageBy(df, Some(tagCol))
+
+  /** Write, then move each file into data/<part>=<v>/ under a name
+    * unique forever; files come back by `tagCol` value ("" untagged). */
+  private def stageBy(df: DataFrame, tagCol: Option[String]): Map[String, Seq[TxFile]] = {
     val uuid = java.util.UUID.randomUUID().toString
     val staging = s"$root/_staging/$uuid"
-    df.write.partitionBy(partitionCol, tagCol).mode("overwrite").parquet(staging)
-    val out = scala.collection.mutable.Map
+    df.write.partitionBy(partitionCol +: tagCol.toSeq: _*).mode("overwrite").parquet(staging)
+    def value(dir: org.apache.hadoop.fs.Path) = dir.getName match {
+      case PartitionDirName(_, v) => v
+      case _ => ""
+    }
+    val out = scala.collection.mutable.LinkedHashMap
       .empty[String, scala.collection.mutable.ArrayBuffer[TxFile]]
     val it = fs.listFiles(new org.apache.hadoop.fs.Path(staging), true)
     while (it.hasNext) {
       val f = it.next().getPath
       if (f.getName.endsWith(".parquet")) {
-        val tag = f.getParent.getName match {
-          case PartitionDirName(_, t) => t
-          case _ => ""
-        }
-        val partDir = f.getParent.getParent.getName
-        val part = partDir match {
-          case PartitionDirName(_, v) => v
-          case _ => ""
-        }
-        val rel = s"data/$partDir/$uuid-$tag-${f.getName}"
+        val (partDir, tag) =
+          if (tagCol.isEmpty) (f.getParent, "") else (f.getParent.getParent, value(f.getParent))
+        val rel = s"data/${partDir.getName}/$uuid-${if (tag.isEmpty) "" else tag + "-"}${f.getName}"
         val dest = new org.apache.hadoop.fs.Path(root, rel)
         fs.mkdirs(dest.getParent)
         if (!fs.rename(f, dest))
           throw new java.io.IOException(s"failed to move staged file $f -> $dest")
         out.getOrElseUpdate(tag, scala.collection.mutable.ArrayBuffer.empty) +=
-          TxFile(rel, part)
+          TxFile(rel, value(partDir))
       }
     }
     fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-    val all = out.valuesIterator.flatten.toSeq
-    computeStagedStats(all)
+    computeStagedStats(out.valuesIterator.flatten.toSeq)
     out.view.mapValues(_.toSeq).toMap
   }
 
-  /** Append-commit: stage `df`'s files, then CAS them onto whatever
-    * the latest snapshot is. Never conflicts — concurrent commits
-    * just cost a re-read of the manifest, and no committed file is
-    * ever removed by an append.
-    */
   /** Additive schema evolution on append (the public Delta
     * `mergeSchema` contract): the committed schema is the prior
     * snapshot's fields (order preserved) plus any NEW fields the
@@ -531,6 +502,11 @@ class TxTable(val spark: SparkSession, val root: String,
     StructType(prev.fields ++ next.fields.filterNot(f => prevNames.contains(f.name)))
   }
 
+  /** Append-commit: stage `df`'s files, then CAS them onto whatever
+    * the latest snapshot is. Never conflicts — concurrent commits
+    * just cost a re-read of the manifest, and no committed file is
+    * ever removed by an append.
+    */
   def append(df: DataFrame): Long = commitAppend(stage(df), df.schema)
 
   /** Append-commit of already-staged [[TxFile]]s — the log half of
@@ -539,12 +515,14 @@ class TxTable(val spark: SparkSession, val root: String,
     * Spark write per commit.
     */
   private[storage] def commitAppend(files: Seq[TxFile], schema: StructType): Long =
-    retryCas("append") { (v, _) =>
-      // merge against the schema AT CAS TIME (re-run on every lost
-      // race), so a concurrent writer's added column can't be dropped
-      val merged = if (v < 0) schema else mergeSchemas(snapshot(v).schema, schema)
-      (Seq.empty, files, Seq.empty, merged)
+    retryCas("append") { snap =>
+      (Seq.empty, files, Seq.empty, mergedSchema(snap, schema))
     }
+
+  /** `schema` merged onto the snapshot a commit builds on, at CAS
+    * time, so a concurrent writer's added column can't be dropped. */
+  private def mergedSchema(snap: Snapshot, schema: StructType): StructType =
+    if (snap.schema == null) schema else mergeSchemas(snap.schema, schema)
 
   /** Rewrite the given partitions with `compute(current content of
     * those partitions)`, under optimistic concurrency: if another
@@ -561,8 +539,8 @@ class TxTable(val spark: SparkSession, val root: String,
   def rewritePartitions(parts: Set[String], maxAttempts: Int = 20)
                        (compute: DataFrame => DataFrame): Long =
     withConflictRetry(maxAttempts) { () =>
-      val (v, curDf) = readPartitions(parts, "rewritePartitions")
-      val result = compute(curDf)
+      val (v, cur) = snapshotPartitions(parts)
+      val result = compute(cur.getOrElse(uncommitted("rewritePartitions")))
       val staged = stageInto(parts, result, s"rewritePartitions($parts)")
       commitRewrite(v, parts, staged, result.schema)
     }
@@ -586,17 +564,22 @@ class TxTable(val spark: SparkSession, val root: String,
   }
 
   /** Current (version, content of `parts`) — the snapshot read every
-    * partition-scoped writer starts from. Throws on an uncommitted
-    * table (there is no schema to read the partitions as).
+    * partition-scoped writer starts from. The content is None on an
+    * uncommitted table (version -1): no schema, no rows. The
+    * rewriters, which recompute prior content, reject that case.
     */
-  private def readPartitions(parts: Set[String], op: String): (Long, DataFrame) = {
+  private def snapshotPartitions(parts: Set[String]): (Long, Option[DataFrame]) = {
     val v = version
-    val snap = if (v < 0) Snapshot(-1, null, Seq.empty) else snapshot(v)
-    val current = snap.files.filter(f => parts.contains(f.partition))
-    if (current.isEmpty && snap.schema == null)
-      throw new IllegalStateException(s"$op on uncommitted table $root")
-    (v, readSnapshot(Snapshot(v, snap.schema, current, snap.dv)))
+    if (v < 0) (v, None)
+    else {
+      val snap = snapshot(v)
+      val current = snap.files.filter(f => parts.contains(f.partition))
+      (v, Some(readSnapshot(Snapshot(v, snap.schema, current, snap.dv))))
+    }
   }
+
+  private def uncommitted(op: String): Nothing =
+    throw new IllegalStateException(s"$op on uncommitted table $root")
 
   /** [[stage]] + the partition-containment guard every partition-
     * scoped commit requires: staged files outside `parts` would
@@ -652,22 +635,23 @@ class TxTable(val spark: SparkSession, val root: String,
   def commitRewrite(readVersion: Long, parts: Set[String],
                     adds: Seq[TxFile], schema: StructType,
                     freshAdds: Seq[TxFile] = Seq.empty): Long =
-    retryCas(if (freshAdds.isEmpty) "rewrite" else "upsert") { (v, base) =>
-      conflictCheck(readVersion, v, parts, base)
-      (adds, freshAdds, base.filter(f => parts.contains(f.partition)), schema)
+    retryCas(if (freshAdds.isEmpty) "rewrite" else "upsert") { snap =>
+      conflictCheck(readVersion, snap.version, parts, snap.files)
+      (adds, freshAdds, snap.files.filter(f => parts.contains(f.partition)), schema)
     }
 
   /** Conditional-append commit: adds `freshAdds` (net-new rows only)
     * WITHOUT touching any existing file, failing like a rewrite if
-    * `parts` changed after `readVersion` — the anti-join that proved
-    * the rows new was computed against that snapshot, so a
-    * same-partition commit invalidates it.
+    * `parts` changed after `readVersion` (-1: the table was
+    * uncommitted) — the anti-join that proved the rows new was
+    * computed against that snapshot, so a same-partition commit
+    * invalidates it. The schema evolves additively, as on append.
     */
   def commitUpsert(readVersion: Long, parts: Set[String],
                    freshAdds: Seq[TxFile], schema: StructType): Long =
-    retryCas("upsert") { (v, base) =>
-      conflictCheck(readVersion, v, parts, base)
-      (Seq.empty, freshAdds, Seq.empty, schema)
+    retryCas("upsert") { snap =>
+      conflictCheck(readVersion, snap.version, parts, snap.files)
+      (Seq.empty, freshAdds, Seq.empty, mergedSchema(snap, schema))
     }
 
   /** First-write-wins upsert of a batch (ST4 `ON CONFLICT DO NOTHING`,
@@ -678,8 +662,12 @@ class TxTable(val spark: SparkSession, val root: String,
     * small batch into a 100 TB partition costs O(batch), and the
     * change feed delivers exactly the rows this call actually
     * inserted (`n` files).
-    */
-  /** `knownParts`: when the caller already knows the partition values
+    *
+    * An uncommitted table takes the whole batch as its first commit
+    * (an empty batch publishes just its schema as v0), conflict-
+    * checked from version -1 like any other.
+    *
+    * `knownParts`: when the caller already knows the partition values
     * the batch carries (e.g. it stamped them itself), passing them
     * skips the `touchedPartitions` distinct+collect job on the commit
     * hot path. The set must COVER the batch — [[stageInto]]'s
@@ -712,15 +700,16 @@ class TxTable(val spark: SparkSession, val root: String,
     var committed: Seq[TxFile] = Seq.empty
     var schema: StructType = batch.schema
     val v = withConflictRetry(maxAttempts) { () =>
-      val (v0, existing) = readPartitions(parts, "insertIgnore")
-      val fresh = batch.join(existing.select(keys.map(col): _*), keys, "left_anti")
+      val (v0, existing) = snapshotPartitions(parts)
+      val fresh = existing.fold(batch)(e =>
+        batch.join(e.select(keys.map(col): _*), keys, "left_anti"))
       val staged = stageInto(parts, fresh, "insertIgnore")
       committed = staged
       schema = fresh.schema
       // a fully-duplicate batch (the routine ON CONFLICT DO NOTHING
       // re-delivery) must not publish an empty delta: every no-op
       // version bump widens the vacuum/time-travel window for nothing
-      if (staged.isEmpty) v0
+      if (staged.isEmpty && v0 >= 0) v0
       else commitUpsert(v0, parts, staged, fresh.schema)
     }
     (v, readSnapshot(Snapshot(v, schema, committed, Map.empty)))
@@ -737,8 +726,8 @@ class TxTable(val spark: SparkSession, val root: String,
   def upsertRewritePartitions(parts: Set[String], maxAttempts: Int = 20)
                              (compute: DataFrame => (DataFrame, DataFrame)): Long =
     withConflictRetry(maxAttempts) { () =>
-      val (v, curDf) = readPartitions(parts, "upsertRewritePartitions")
-      val (reshaped, fresh) = compute(curDf)
+      val (v, cur) = snapshotPartitions(parts)
+      val (reshaped, fresh) = compute(cur.getOrElse(uncommitted("upsertRewritePartitions")))
       val stagedOld = stageInto(parts, reshaped, s"upsertRewritePartitions($parts)")
       val stagedNew = stageInto(parts, fresh, s"upsertRewritePartitions($parts)")
       commitRewrite(v, parts, stagedOld, reshaped.schema, freshAdds = stagedNew)
@@ -801,41 +790,42 @@ class TxTable(val spark: SparkSession, val root: String,
   def deleteWhere(cond: org.apache.spark.sql.Column, maxAttempts: Int = 20,
                   maxMarks: Long = TxTable.DefaultDvMarkBudget): Long =
     withConflictRetry(maxAttempts) { () =>
-      import org.apache.spark.sql.functions.{col, collect_list, element_at, sort_array, split}
       val v = version
       require(v >= 0, s"deleteWhere on uncommitted table $root")
       val snap = snapshot(v)
-      val matched = readSnapshot(snap)
-        .filter(cond)
-        .select(
-          element_at(split(col("_metadata.file_path"), "/"), -1).as("f"),
-          col("_metadata.row_index").as("i"))
-        .groupBy(col("f")).agg(sort_array(collect_list(col("i"))).as("is"))
-        .collect()
-      // the durable hazard is the mark SET: it rides every subsequent
-      // delta/checkpoint and broadcasts into every read, so a broad
-      // predicate degrades the table long after the commit. (The
-      // transient collect above is already bounded by Spark's own
-      // spark.driver.maxResultSize guard.) Past the budget this is a
-      // bulk delete wearing merge-on-read clothes — fail loudly.
-      val nMarks = matched.iterator.map(_.getSeq[Long](1).size.toLong).sum
-      require(nMarks <= maxMarks,
-        s"deleteWhere matched $nMarks rows — past the $maxMarks deletion-" +
-          "vector mark budget (marks ride every delta/checkpoint and " +
-          "broadcast into every read). Bulk deletes belong to " +
-          "rewritePartitions(parts)(_.filter(!cond)); or raise maxMarks " +
-          "deliberately")
-      if (matched.isEmpty) v
-      else {
-        val byName = snap.files.map(f =>
-          f.path.substring(f.path.lastIndexOf('/') + 1) -> f).toMap
-        val adds = matched.toSeq.map { r =>
-          val f = byName(r.getString(0))
-          (f, r.getSeq[Long](1))
-        }
-        commitDvOps(v, adds)
-      }
+      val adds = dvMarks(snap, readSnapshot(snap).filter(cond))
+      requireMarkBudget("deleteWhere", adds, maxMarks,
+        "Bulk deletes belong to rewritePartitions(parts)(_.filter(!cond))")
+      if (adds.isEmpty) v else commitDvOps(v, adds)
     }
+
+  /** Per-file deletion-vector marks of a snapshot read's rows, from
+    * the parquet `_metadata` (file name, row index) columns. */
+  private def dvMarks(snap: Snapshot, rows: DataFrame): Seq[(TxFile, Seq[Long])] = {
+    import org.apache.spark.sql.functions.{col, element_at, split}
+    marksAt(snap, rows.select(element_at(split(col("_metadata.file_path"), "/"), -1).as("f"),
+      col("_metadata.row_index").as("i")))
+  }
+
+  /** [[dvMarks]] over coordinates already projected as (f, i). */
+  private def marksAt(snap: Snapshot, coords: DataFrame): Seq[(TxFile, Seq[Long])] = {
+    import org.apache.spark.sql.functions.{col, collect_list, sort_array}
+    val byName = snap.files.map(f => f.path.substring(f.path.lastIndexOf('/') + 1) -> f).toMap
+    coords.groupBy(col("f")).agg(sort_array(collect_list(col("i"))).as("is")).collect()
+      .toSeq.map(r => (byName(r.getString(0)), r.getSeq[Long](1)))
+  }
+
+  /** Fail `op` loudly past the mark budget: marks ride every later
+    * delta/checkpoint and broadcast into every read, so a broad match
+    * is a bulk change, which belongs to `bulk`. */
+  private def requireMarkBudget(op: String, marks: Seq[(TxFile, Seq[Long])],
+                                maxMarks: Long, bulk: String): Unit = {
+    val n = marks.iterator.map(_._2.size.toLong).sum
+    require(n <= maxMarks,
+      s"$op matched $n rows — past the $maxMarks deletion-vector mark budget " +
+        s"(marks ride every delta/checkpoint and broadcast into every read). " +
+        s"$bulk; or raise maxMarks deliberately")
+  }
 
   /** Atomic UPDATE, merge-on-read: matching rows are vector-marked
     * dead AND their updated replacements committed as reshaped `+`
@@ -856,7 +846,7 @@ class TxTable(val spark: SparkSession, val root: String,
       s"updateWhere may not modify the partition column '$partitionCol' — " +
         "moving rows between partitions is a rewritePartitions job")
     withConflictRetry(maxAttempts) { () =>
-      import org.apache.spark.sql.functions.{col, collect_list, element_at, sort_array, split}
+      import org.apache.spark.sql.functions.col
       val v = version
       require(v >= 0, s"updateWhere on uncommitted table $root")
       val snap = snapshot(v)
@@ -866,23 +856,11 @@ class TxTable(val spark: SparkSession, val root: String,
           s"(have ${snap.schema.fieldNames.mkString(", ")}) — " +
           "adding columns is an append-schema-evolution or rewrite job")
       val matched = readSnapshot(snap).filter(cond)
-      val marks = matched
-        .select(
-          element_at(split(col("_metadata.file_path"), "/"), -1).as("f"),
-          col("_metadata.row_index").as("i"))
-        .groupBy(col("f")).agg(sort_array(collect_list(col("i"))).as("is"))
-        .collect()
-      val nMarks = marks.iterator.map(_.getSeq[Long](1).size.toLong).sum
-      require(nMarks <= maxMarks,
-        s"updateWhere matched $nMarks rows — past the $maxMarks deletion-" +
-          "vector mark budget (marks ride every delta/checkpoint and " +
-          "broadcast into every read). Bulk updates belong to " +
-          "rewritePartitions; or raise maxMarks deliberately")
-      if (marks.isEmpty) v
+      val dvAdds = dvMarks(snap, matched)
+      requireMarkBudget("updateWhere", dvAdds, maxMarks,
+        "Bulk updates belong to rewritePartitions")
+      if (dvAdds.isEmpty) v
       else {
-        val byName = snap.files.map(f =>
-          f.path.substring(f.path.lastIndexOf('/') + 1) -> f).toMap
-        val dvAdds = marks.toSeq.map(r => (byName(r.getString(0)), r.getSeq[Long](1)))
         val parts = dvAdds.map(_._1.partition).toSet
         val updated = sets.foldLeft(matched) { case (df, (c, e)) => df.withColumn(c, e) }
           .select(snap.schema.fieldNames.map(col): _*)
@@ -906,32 +884,14 @@ class TxTable(val spark: SparkSession, val root: String,
                           batchSchema: Option[StructType] = None): Long = {
     val parts = adds.map(_._1.partition).toSet ++ reshaped.map(_.partition) ++
       fresh.map(_.partition)
-    while (true) {
-      val v = version
-      val snap0 = snapshot(v)
+    val meta = adds.map { case (f, idxs) => s"#dv\t${f.path}\t${idxs.mkString(",")}" } ++
+      parts.toSeq.sorted.map(p => s"#touch\t$p")
+    retryCas(kind, meta) { snap =>
+      conflictCheck(readVersion, snap.version, parts, snap.files)
       // a widened merge batch evolves the schema additively, exactly
       // like append (a silently-narrowed batch would drop its columns)
-      val snap = batchSchema
-        .map(b => snap0.copy(schema = mergeSchemas(snap0.schema, b)))
-        .getOrElse(snap0)
-      conflictCheck(readVersion, v, parts, snap.files)
-      val body = ((snap.schema.json +:
-        (reshaped.map(f => s"+\t${f.partition}\t${f.path}") ++
-          fresh.map(f => s"n\t${f.partition}\t${f.path}"))) ++
-        adds.map { case (f, idxs) => s"#dv\t${f.path}\t${idxs.mkString(",")}" } ++
-        parts.toSeq.sorted.map(p => s"#touch\t$p") :+ s"#kind\t$kind")
-        .mkString("\n")
-      val nv = v + 1
-      if (casCreate(deltaPath(nv), body)) {
-        if (reshaped.nonEmpty || fresh.nonEmpty) writeStatsSidecar(nv, reshaped ++ fresh)
-        if (nv > 0 && nv % checkpointInterval == 0) {
-          val s2 = snapshot(nv)
-          casCreate(checkpointPath(nv), checkpointBody(s2.files, s2.schema, s2.dv))
-        }
-        return nv
-      }
+      (reshaped, fresh, Seq.empty, batchSchema.fold(snap.schema)(mergedSchema(snap, _)))
     }
-    sys.error("unreachable")
   }
 
   /** Atomic MERGE (the public Delta `MERGE INTO` contract, merge-on-
@@ -950,92 +910,97 @@ class TxTable(val spark: SparkSession, val root: String,
     * rows may touch partitions outside the batch's own (a key that
     * moved partitions gets its OLD row killed wherever it lives) —
     * all touched partitions conflict-check.
+    *
+    * An uncommitted table has nothing to match: the whole batch lands
+    * as [[insertIgnore]]'s first commit does.
     */
   def mergeInto(batch: DataFrame, keys: Seq[String], maxAttempts: Int = 20,
                 maxMatchedMarks: Long = TxTable.DefaultDvMarkBudget): Long =
     withConflictRetry(maxAttempts) { () =>
-      import org.apache.spark.sql.functions.{broadcast, col, collect_list, lit, sort_array, split, when, element_at}
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
       val v = version
-      require(v >= 0, s"mergeInto on uncommitted table $root")
-      val snap = snapshot(v)
-      // A batch NARROWER than the table would silently null every
-      // omitted column of its matched rows: the old row is DV-killed
-      // and the reshaped replacement carries only the batch's columns,
-      // which read as null under the snapshot schema — data loss, not
-      // evolution. Delta's MERGE errors the same way; the reference's
-      // ON CONFLICT DO UPDATE always carries full-width rows
-      // (fetchers/config/queries.py:6-18). Widened batches still
-      // evolve additively via commitDvOps.
-      val omitted = snap.schema.fieldNames.toSet.diff(batch.columns.toSet)
-      require(omitted.isEmpty,
-        s"mergeInto: batch omits table columns ${omitted.toSeq.sorted.mkString(", ")} — " +
-          "matched rows would read null there (silent data loss). Carry " +
-          "full-width rows (hydrate missing columns from the current " +
-          "table), or use updateWhere for column-scoped changes")
-      val existing = readSnapshot(snap)
-      val bkeys = batch.select(keys.map(col): _*).distinct()
-      // ONE scan of the table yields BOTH the dead coordinates and the
-      // matched key set (formerly three scans: the mark scan plus two
-      // key-distinct probes for the matched/fresh splits). `_metadata`
-      // resolves only on the file-source relation (it does not survive
-      // a join), so the coordinates are projected before the semi-join;
-      // the result is ≤ |batch| rows (unique-key contract), and the
-      // eager localCheckpoint materializes it once for the three tiny
-      // consumers below. The batch materializes CONCURRENTLY — its
-      // lineage may itself be a query, and everything downstream
-      // (keys, split, staging, touched partitions) re-reads it.
-      val markedF = Future(existing
-        .withColumn("__f", element_at(split(col("_metadata.file_path"), "/"), -1))
-        .withColumn("__i", col("_metadata.row_index"))
-        .join(broadcast(bkeys), keys, "left_semi")
-        .select(keys.map(col) :+ col("__f") :+ col("__i"): _*)
-        .localCheckpoint(true))(TxTable.dmlEc)
-      val batchCkF = Future(batch.localCheckpoint(true))(TxTable.dmlEc)
-      val marked = Await.result(markedF, Duration.Inf)
-      val batchCk = Await.result(batchCkF, Duration.Inf)
-      val nMarks = marked.count()
-      require(nMarks <= maxMatchedMarks,
-        s"mergeInto matched $nMarks existing rows — past the $maxMatchedMarks " +
-          "mark budget for a merge-on-read commit (the mark set is driver-" +
-          "collected, rides every delta/checkpoint, and broadcasts into every " +
-          "read). A batch replacing this fraction of the table is a bulk " +
-          "upsert: use upsertRewritePartitions, or raise maxMatchedMarks " +
-          "deliberately")
-      val matchedKeys = marked.select(keys.map(col): _*).distinct()
-      // The matched/fresh split, the staging write, the mark grouping,
-      // and the touched-partition probe are four independent jobs over
-      // checkpointed (or tiny) inputs — submit them concurrently. The
-      // split is ONE tagged write job ([[stageSplit]]) instead of two
-      // per-half writes: a left join against the ≤|batch|-row matched
-      // key set tags each batch row `u` (reshaped `+` file, feed-
-      // skipped) or `n` (fresh file, feed-delivered).
-      val mTag = matchedKeys.withColumn("__m", lit(true))
-      val tagged = batchCk.join(broadcast(mTag), keys, "left")
-        .withColumn("__tag", when(col("__m").isNotNull, lit("u")).otherwise(lit("n")))
-        .drop("__m")
-      val stagedF = Future(stageSplit(tagged, "__tag"))(TxTable.dmlEc)
-      val touchedF = Future(touchedPartitions(batchCk))(TxTable.dmlEc)
-      val deadMarks = marked
-        .select(col("__f").as("f"), col("__i").as("i"))
-        .groupBy(col("f")).agg(sort_array(collect_list(col("i"))).as("is"))
-        .collect()
-      val byName = snap.files.map(f =>
-        f.path.substring(f.path.lastIndexOf('/') + 1) -> f).toMap
-      val dvAdds = deadMarks.toSeq.map(r => (byName(r.getString(0)), r.getSeq[Long](1)))
-      val staged = Await.result(stagedF, Duration.Inf)
-      val stagedUpd = staged.getOrElse("u", Seq.empty)
-      val stagedNew = staged.getOrElse("n", Seq.empty)
-      val parts = Await.result(touchedF, Duration.Inf) ++ dvAdds.map(_._1.partition)
-      val outside = (stagedUpd ++ stagedNew).filterNot(f => parts.contains(f.partition))
-      require(outside.isEmpty,
-        s"mergeInto staged rows outside the touched partitions: " +
-          s"${outside.map(_.partition).distinct}")
-      if (dvAdds.isEmpty && stagedUpd.isEmpty && stagedNew.isEmpty) v
-      else commitDvOps(v, dvAdds, stagedUpd, "merge", stagedNew,
-        batchSchema = Some(batch.schema))
+      if (v < 0) {
+        val staged = stage(batch)
+        commitUpsert(v, staged.map(_.partition).toSet, staged, batch.schema)
+      } else mergeAt(v, batch, keys, maxMatchedMarks)
     }
+
+  /** One [[mergeInto]] attempt against committed version `v`. */
+  private def mergeAt(v: Long, batch: DataFrame, keys: Seq[String],
+                      maxMatchedMarks: Long): Long = {
+    import org.apache.spark.sql.functions.{broadcast, col, lit, split, when, element_at}
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    val snap = snapshot(v)
+    // A batch NARROWER than the table would silently null every
+    // omitted column of its matched rows: the old row is DV-killed
+    // and the reshaped replacement carries only the batch's columns,
+    // which read as null under the snapshot schema — data loss, not
+    // evolution. Delta's MERGE errors the same way; the reference's
+    // ON CONFLICT DO UPDATE always carries full-width rows
+    // (fetchers/config/queries.py:6-18). Widened batches still
+    // evolve additively via commitDvOps.
+    val omitted = snap.schema.fieldNames.toSet.diff(batch.columns.toSet)
+    require(omitted.isEmpty,
+      s"mergeInto: batch omits table columns ${omitted.toSeq.sorted.mkString(", ")} — " +
+        "matched rows would read null there (silent data loss). Carry " +
+        "full-width rows (hydrate missing columns from the current " +
+        "table), or use updateWhere for column-scoped changes")
+    val existing = readSnapshot(snap)
+    val bkeys = batch.select(keys.map(col): _*).distinct()
+    // ONE scan of the table yields BOTH the dead coordinates and the
+    // matched key set (formerly three scans: the mark scan plus two
+    // key-distinct probes for the matched/fresh splits). `_metadata`
+    // resolves only on the file-source relation (it does not survive
+    // a join), so the coordinates are projected before the semi-join;
+    // the result is ≤ |batch| rows (unique-key contract), and the
+    // eager localCheckpoint materializes it once for the three tiny
+    // consumers below. The batch materializes CONCURRENTLY — its
+    // lineage may itself be a query, and everything downstream
+    // (keys, split, staging, touched partitions) re-reads it.
+    val markedF = Future(existing
+      .withColumn("__f", element_at(split(col("_metadata.file_path"), "/"), -1))
+      .withColumn("__i", col("_metadata.row_index"))
+      .join(broadcast(bkeys), keys, "left_semi")
+      .select(keys.map(col) :+ col("__f") :+ col("__i"): _*)
+      .localCheckpoint(true))(TxTable.dmlEc)
+    val batchCkF = Future(batch.localCheckpoint(true))(TxTable.dmlEc)
+    val marked = Await.result(markedF, Duration.Inf)
+    val batchCk = Await.result(batchCkF, Duration.Inf)
+    val nMarks = marked.count()
+    require(nMarks <= maxMatchedMarks,
+      s"mergeInto matched $nMarks existing rows — past the $maxMatchedMarks " +
+        "mark budget for a merge-on-read commit (the mark set is driver-" +
+        "collected, rides every delta/checkpoint, and broadcasts into every " +
+        "read). A batch replacing this fraction of the table is a bulk " +
+        "upsert: use upsertRewritePartitions, or raise maxMatchedMarks " +
+        "deliberately")
+    val matchedKeys = marked.select(keys.map(col): _*).distinct()
+    // The matched/fresh split, the staging write, the mark grouping,
+    // and the touched-partition probe are four independent jobs over
+    // checkpointed (or tiny) inputs — submit them concurrently. The
+    // split is ONE tagged write job ([[stageSplit]]) instead of two
+    // per-half writes: a left join against the ≤|batch|-row matched
+    // key set tags each batch row `u` (reshaped `+` file, feed-
+    // skipped) or `n` (fresh file, feed-delivered).
+    val mTag = matchedKeys.withColumn("__m", lit(true))
+    val tagged = batchCk.join(broadcast(mTag), keys, "left")
+      .withColumn("__tag", when(col("__m").isNotNull, lit("u")).otherwise(lit("n")))
+      .drop("__m")
+    val stagedF = Future(stageSplit(tagged, "__tag"))(TxTable.dmlEc)
+    val touchedF = Future(touchedPartitions(batchCk))(TxTable.dmlEc)
+    val dvAdds = marksAt(snap, marked.select(col("__f").as("f"), col("__i").as("i")))
+    val staged = Await.result(stagedF, Duration.Inf)
+    val stagedUpd = staged.getOrElse("u", Seq.empty)
+    val stagedNew = staged.getOrElse("n", Seq.empty)
+    val parts = Await.result(touchedF, Duration.Inf) ++ dvAdds.map(_._1.partition)
+    val outside = (stagedUpd ++ stagedNew).filterNot(f => parts.contains(f.partition))
+    require(outside.isEmpty,
+      s"mergeInto staged rows outside the touched partitions: " +
+        s"${outside.map(_.partition).distinct}")
+    if (dvAdds.isEmpty && stagedUpd.isEmpty && stagedNew.isEmpty) v
+    else commitDvOps(v, dvAdds, stagedUpd, "merge", stagedNew,
+      batchSchema = Some(batch.schema))
+  }
 
   /** [[compact]]'s layout-aware form — the public Delta
     * `OPTIMIZE ZORDER BY` trade: fat partitions (> maxFilesPerPartition
@@ -1181,20 +1146,22 @@ class TxTable(val spark: SparkSession, val root: String,
       .mkString("\n")
   }
 
-  /** Run `build(latestVersion, itsFiles)` to produce the next
-    * commit's (adds, removes, schema) and CAS-publish the delta as
-    * latest+1; on a lost race, re-runs `build` against the new
-    * latest. `build` may throw (conflict detection) — that propagates
+  /** Run `build(latest snapshot)` to produce the next commit's
+    * (reshaped adds, fresh adds, removes, schema) and CAS-publish the
+    * delta, with the `meta` lines, as latest+1; on a lost race,
+    * re-runs `build` against the new latest. Every commit path goes
+    * through here. An uncommitted table builds on `Snapshot(-1, null,
+    * Nil)`. `build` may throw (conflict detection) — that propagates
     * to the caller. Every `checkpointInterval`-th version also gets a
     * full checkpoint; checkpoint contents are deterministic per
     * version, so a lost checkpoint race is harmless.
     */
-  private def retryCas(kind: String)(
-      build: (Long, Seq[TxFile]) => (Seq[TxFile], Seq[TxFile], Seq[TxFile], StructType)): Long = {
+  private def retryCas(kind: String, meta: Seq[String] = Nil)(
+      build: Snapshot => (Seq[TxFile], Seq[TxFile], Seq[TxFile], StructType)): Long = {
     while (true) {
       val v = version
-      val base = if (v < 0) Seq.empty[TxFile] else snapshot(v).files
-      val (reshaped, fresh, removes, schema) = build(v, base)
+      val (reshaped, fresh, removes, schema) =
+        build(if (v < 0) Snapshot(-1, null, Seq.empty) else snapshot(v))
       // '#'-prefixed metadata lines are skipped by every op-line
       // parser. The op letter carries the content provenance the
       // change feed needs: `n` files hold rows never committed before
@@ -1204,7 +1171,7 @@ class TxTable(val spark: SparkSession, val root: String,
       val ops = removes.map(f => s"-\t${f.partition}\t${f.path}") ++
         reshaped.map(f => s"+\t${f.partition}\t${f.path}") ++
         fresh.map(f => s"n\t${f.partition}\t${f.path}")
-      val body = ((schema.json +: ops) :+ s"#kind\t$kind").mkString("\n")
+      val body = ((schema.json +: ops) ++ meta :+ s"#kind\t$kind").mkString("\n")
       val nv = v + 1
       if (casCreate(deltaPath(nv), body)) {
         writeStatsSidecar(nv, reshaped ++ fresh)

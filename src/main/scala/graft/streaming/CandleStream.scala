@@ -63,24 +63,12 @@ object CandleStream {
         col("c.low").as("low"), col("c.close").as("close"),
         col("c.volume").as("volume"))
 
-  /** ST4: flush batch → base table with first-write-wins (ON CONFLICT
-    * DO NOTHING, fetchers/config/queries.py:4). Use inside
-    * foreachBatch against the stored table.
-    */
-  def flushIgnoreDuplicates(existing: DataFrame, batch: DataFrame): DataFrame =
-    CandleOps.insertIgnore(existing, CandleOps.dedup(batch))
-
-  /** ST5: periodic REST repair — re-fetched rows upsert with
-    * DO UPDATE (celery_app/celery_tasks.py:73-84).
-    */
-  def reconcile(existing: DataFrame, refetched: DataFrame): DataFrame =
-    CandleOps.upsert(existing, CandleOps.dedup(refetched))
-
   /** ST5's LIVE form: stream–stream left-outer join of the WS candle
     * stream with the REST repair stream, per (key, 1-minute bucket),
-    * inside the watermark horizon — the streaming counterpart of
-    * [[reconcile]] (which fixes the table after the fact, the batch
-    * shadow of the reference's updater/repair pair). A live message
+    * inside the watermark horizon — the streaming counterpart of the
+    * `repair` job's [[graft.storage.TxTable.mergeInto]] (which fixes
+    * the table after the fact, the batch shadow of the reference's
+    * updater/repair pair). A live message
     * whose bucket gets a repair row within `delay` emits with the
     * repair's authoritative values (`repaired = true`); an unmatched
     * message emits unchanged once both watermarks pass its bucket —
@@ -94,7 +82,7 @@ object CandleStream {
     * the watermark advances (asserted in StreamRepairJoinSpec via
     * `stateOperators.numRowsTotal`). Repairs arriving later than
     * `delay` are outside the live join horizon by design; they remain
-    * the batch [[reconcile]] path's job.
+    * the batch repair path's job.
     */
   def repairJoin(live: DataFrame, repairs: DataFrame,
                  delay: String = "10 minutes"): DataFrame = {
@@ -104,7 +92,7 @@ object CandleStream {
         col("close") :+ col("volume"): _*)
     // the repair side re-fetches periodically, so the same (key,
     // bucket) can arrive more than once inside the horizon — exactly
-    // why batch [[reconcile]] runs CandleOps.dedup first. Without this
+    // why the batch repair runs CandleOps.dedup first. Without this
     // dedup every duplicate repair row would re-emit each matched live
     // message into the append-only output (nothing retracts).
     // First-repair-wins within the watermark, state evicted with it.
@@ -140,17 +128,15 @@ object CandleStream {
     * against the table). Returns the running query; stop() to shut
     * down.
     *
-    * Concurrent-writer safety: each micro-batch stages its files and
-    * append-commits them through the table's transaction log, so a
-    * maintenance rewrite (incremental refresh, compaction —
-    * AggregateMaintenance / TxTable.compact) running at the same
-    * moment can never drop the batch's files: rewrites are
-    * partition-conflict-checked and retried, appends are
-    * never-conflicting (TxLog.scala). First-write-wins (ST4) holds
-    * because the anti-join reads the snapshot the commit builds on.
-    * The reference gets this interleaving safety from Postgres MVCC.
+    * Concurrent-writer safety: each micro-batch commits through
+    * [[graft.storage.TxTable.insertIgnore]], conflict-checked against
+    * the snapshot its anti-join read, so a commit to the batch's
+    * partitions after that read — another writer's candles or a
+    * maintenance rewrite (AggregateMaintenance, TxTable.compact) —
+    * makes the batch re-run: first write wins (ST4), and no committed
+    * file is dropped. The reference gets this from Postgres MVCC.
     *
-    * Scale: each micro-batch appends only to the date partitions its
+    * Scale: each micro-batch writes only to the date partitions its
     * buckets fall in, and the first-write-wins anti-join reads back
     * only those partitions, so per-trigger cost tracks the batch, not
     * the table's age.
@@ -190,21 +176,11 @@ object CandleStream {
         // set, so it's computed on the raw batch — no cache needed).
         val withDate = batch.toDF().withColumn("p_date", to_date(col("time")))
         val parts = table.touchedPartitions(withDate)
-        if (parts.nonEmpty) {
-          val incoming = CandleOps.dedup(withDate)
-          if (table.version < 0) table.append(incoming)
-          else {
-            // first-write-wins against the current snapshot, pruned to
-            // the batch's own partitions (partition pruning at scale);
-            // a re-delivered batch after crash recovery anti-joins to
-            // nothing — the idempotent ST4/ST6 sink policy.
-            val existing = table.read()
-              .filter(col("p_date").cast("string").isInCollection(parts))
-              .select((CandleOps.keyCols :+ "time").map(col): _*)
-            table.append(
-              incoming.join(existing, CandleOps.keyCols :+ "time", "left_anti"))
-          }
-        }
+        // a re-delivered batch after crash recovery inserts nothing —
+        // the idempotent ST4/ST6 sink policy
+        if (parts.nonEmpty)
+          table.insertIgnore(CandleOps.dedup(withDate), CandleOps.keyCols :+ "time",
+            knownParts = Some(parts))
         if (maintainEvery > 0 &&
             sinceMaintain.incrementAndGet() >= maintainEvery) {
           sinceMaintain.set(0)

@@ -248,4 +248,9 @@ class MainSpec extends SparkSpec {
     }
     assert(Main.parseTs("2021-01-01T00:00:00") === t0)
   }
+
+  test("usage message names every action run accepts") {
+    val e = intercept[IllegalArgumentException] { Main.parse(Array.empty) }
+    Seq("backfill", "stream", "repair", "curate").foreach(a => assert(e.getMessage.contains(a)))
+  }
 }

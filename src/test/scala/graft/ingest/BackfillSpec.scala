@@ -60,7 +60,12 @@ class BackfillSpec extends SparkSpec {
       .toDF("time", "exchange", "base_id", "quote_id", "open", "high", "low", "close", "volume")
       .withColumn("time", col("time").cast("timestamp"))
 
-    val (table, errors) = Backfill.backfillInto(existing, tasks, FakeExchange)
+    // Main.backfill's sink: insertIgnore into a TxTable first seeded with `existing`
+    val t = new graft.storage.TxTable(spark, java.nio.file.Files.createTempDirectory("bf").toString)
+    val (candles, errors) = Backfill.run(tasks, FakeExchange)
+    Seq(existing, candles).foreach(df => t.insertIgnore(df.withColumn("p_date",
+      to_date(col("time"))), Seq("exchange", "base_id", "quote_id", "time")))
+    val table = t.read()
     assert(table.count() == 1440) // 1 day of minutes, dup with existing ignored
     assert(table.filter(col("time") === "1970-01-01 00:00:00")
       .first().getAs[Double]("open") == 7.0) // first write wins

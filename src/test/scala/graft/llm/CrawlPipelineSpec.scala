@@ -53,10 +53,8 @@ class CrawlPipelineSpec extends SparkSpec {
       // redelivered row must land where its first delivery did — a
       // batchId-derived date would duplicate across a checkpoint reset
       // (this spec's final act IS a reset).
-      batch.filter(col("is_corrupt"))
-        .select(col("raw_line"), lit("errors").as("p_date"))
-        .transform(b => { if (errs.version < 0) errs.append(b)
-                          else errs.insertIgnore(b, Seq("raw_line")); b })
+      errs.insertIgnore(batch.filter(col("is_corrupt"))
+        .select(col("raw_line"), lit("errors").as("p_date")), Seq("raw_line"))
       val clean = batch.filter(wellFormed)
         .filter(QualityRules.okWordCount(size(TextOps.words(col("text")))))
       val before = sink.version

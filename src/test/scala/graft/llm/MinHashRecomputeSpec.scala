@@ -31,10 +31,10 @@ class MinHashRecomputeSpec extends SparkSpec {
     // CPU concentrated in the kernel: enough docs x shingles that
     // md5-per-shingle dwarfs every downstream stage (docs are mostly
     // unique, so the candidate/verify side stays tiny).
-    // 2000×150 clears the 200 ms discrimination floor in the hottest
-    // JIT regime too (1200 read 199 ms mid-full-suite and tripped the
-    // too-light guard by a millisecond)
-    val docs = (1L to 2000L)
+    // 3500×150 clears the 200 ms discrimination floor in the hottest
+    // JIT regime too (1200 read 199 ms mid-full-suite; 2000 read
+    // 163-191 ms on a 4-core box and tripped the too-light guard)
+    val docs = (1L to 3500L)
       .map(i => (i, (0 until 150).map(j => s"shingle-$i-$j-padding-for-hash-cost")))
       .toDF("id", "sh")
       .localCheckpoint(true) // fixture cost must not land in either profile

@@ -177,4 +177,19 @@ class SketchesSpec extends SparkSpec {
       Sketches.bloomMightContain(sketch, dup, col("g"), col("v"), h = 6)
     }
   }
+
+  test("bloom probe refuses a sketch built with another h or bitsLog2, in both directions") {
+    val members = Seq((0L, "a"), (0L, "b")).toDF("g", "v")
+    def probe(build: (Int, Int), at: (Int, Int)) = Sketches.bloomMightContain(
+      Sketches.bloomBuild(members, col("g"), col("v"), h = build._1, bitsLog2 = build._2),
+      members, col("g"), col("v"), h = at._1, bitsLog2 = at._2)
+    // a probe larger than its build reads bits the build never set
+    // (false negatives); a smaller one indexes outside its words
+    Seq((4, 12) -> (4, 18), (4, 18) -> (4, 12), (2, 18) -> (4, 18), (4, 18) -> (2, 18)).foreach {
+      case (b, p) =>
+        val e = intercept[IllegalArgumentException](probe(b, p))
+        assert(e.getMessage.contains(s"h=${b._1}, bitsLog2=${b._2}"), s"got: ${e.getMessage}")
+    }
+    assert(probe((2, 12), (2, 12)).select("maybe").as[Boolean].collect().forall(identity))
+  }
 }

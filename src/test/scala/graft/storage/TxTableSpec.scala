@@ -168,6 +168,48 @@ class TxTableSpec extends SparkSpec {
     assert(got(7) == "NEW7")
   }
 
+  test("two writers bootstrapping one table with overlapping keys: one row per key") {
+    val t = freshTable()
+    val start = new java.util.concurrent.CyclicBarrier(2)
+    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+    val writers = Seq(rows(0 until 30, "2021-01-01"), rows(15 until 45, "2021-01-01")).map(b =>
+      new Thread(() => try { start.await(); t.insertIgnore(b, Seq("id")) }
+        catch { case e: Throwable => errs.add(e) }))
+    writers.foreach(_.start()); writers.foreach(_.join(120000))
+    assert(errs.isEmpty, s"writer threads failed: ${errs.toArray.mkString(";")}")
+    assert(t.read().select("id").as[Long].collect().sorted.toSeq == (0L until 45L))
+  }
+
+  test("insertIgnore retries a same-key commit landing between its snapshot read and its CAS") {
+    val t = freshTable()
+    // a racing writer's key-5 row, committed from inside insertIgnore's
+    // stage job: after its snapshot read (of the uncommitted table),
+    // before its CAS
+    val racer = rows(5 until 6, "2021-01-01").withColumn("v", lit("racer"))
+    val racerFiles = t.stage(racer)
+    val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
+    TxTableSpecHook.onRow.set(() =>
+      if (fired.compareAndSet(false, true)) t.commitAppend(racerFiles, racer.schema))
+    val hook = udf((id: Long) => { TxTableSpecHook.onRow.get()(); id }).asNondeterministic()
+    try t.insertIgnore(rows(4 until 7, "2021-01-01").withColumn("id", hook(col("id"))),
+      Seq("id"), knownParts = Some(Set("2021-01-01")))
+    finally TxTableSpecHook.onRow.set(() => ())
+    assert(fired.get, "the racing commit never ran")
+    val got = t.read().collect().map(r => r.getLong(0) -> r.getString(1)).toSeq
+    assert(got.sortBy(_._1) == Seq(4L -> "v4", 5L -> "racer", 6L -> "v6"))
+    assert(t.version == 1) // v0 the racer, v1 the retried insert
+  }
+
+  test("an empty first insertIgnore or mergeInto publishes the batch schema as v0") {
+    val empty = rows(0 until 0, "2021-01-01")
+    Seq[TxTable => Long](_.insertIgnore(empty, Seq("id")), _.mergeInto(empty, Seq("id")))
+      .foreach { write =>
+        val t = freshTable()
+        assert(write(t) == 0L && t.version == 0 && t.read().count() == 0)
+        assert(t.read().schema.fieldNames.toSeq == Seq("id", "v", "p_date"))
+      }
+  }
+
   test("concurrent appender vs partition-rewriter: zero lost, zero duplicated") {
     val t = freshTable()
     t.append(rows(0 until 1, "2021-01-01"))
@@ -316,4 +358,11 @@ class TxTableSpec extends SparkSpec {
     assert(t.read().count() == 61)
     assert(t.read().filter(col("base_id") === "ETH").count() == 1)
   }
+}
+
+/** A side effect a UDF fires from inside a Spark task (local-mode
+  * executors share the JVM), so a spec can commit mid-write.
+  */
+object TxTableSpecHook {
+  val onRow = new java.util.concurrent.atomic.AtomicReference[() => Unit](() => ())
 }

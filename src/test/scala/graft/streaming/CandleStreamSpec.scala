@@ -59,15 +59,18 @@ class CandleStreamSpec extends SparkSpec {
     val dupAndNew = Seq(ws(0, 555.0, 5.0), ws(60000, 103.0, 3.0)).toDF()
       .withColumn("time", timestamp_millis($"ts_ms")).drop("ts_ms")
 
-    val flushed = CandleStream.flushIgnoreDuplicates(existing, dupAndNew)
-    assert(flushed.count() == 2)
-    assert(flushed.filter($"time" === timestamp_millis(lit(t0)))
-      .first().getAs[Double]("close") == 100.0)
-
-    val reconciled = CandleStream.reconcile(existing, dupAndNew)
-    assert(reconciled.count() == 2)
-    assert(reconciled.filter($"time" === timestamp_millis(lit(t0)))
-      .first().getAs[Double]("close") == 555.0)
+    // the production sinks on one TxTable: the live sink's insertIgnore
+    // (first write wins), then the repair job's mergeInto (DO UPDATE)
+    val keys = graft.ops.CandleOps.keyCols :+ "time"
+    def withDate(df: org.apache.spark.sql.DataFrame) =
+      graft.ops.CandleOps.dedup(df).withColumn("p_date", to_date($"time"))
+    val t = new graft.storage.TxTable(spark, java.nio.file.Files.createTempDirectory("st4").toString)
+    def closeAtT0 = t.read().filter($"time" === timestamp_millis(lit(t0))).first().getAs[Double]("close")
+    t.insertIgnore(withDate(existing), keys)
+    t.insertIgnore(withDate(dupAndNew), keys)
+    assert(t.read().count() == 2 && closeAtT0 == 100.0)
+    t.mergeInto(withDate(dupAndNew), keys)
+    assert(t.read().count() == 2 && closeAtT0 == 555.0)
   }
 
   test("runPipelineTx: tx-log sink stays idempotent and survives a concurrent compaction") {
@@ -95,7 +98,7 @@ class CandleStreamSpec extends SparkSpec {
     } finally q.stop()
 
     // fresh query instance re-delivers an overlapping bucket: the
-    // snapshot anti-join keeps the sink idempotent (ST4/ST6)
+    // insertIgnore sink keeps it idempotent (ST4/ST6)
     val in2 = MemoryStream[WsCandle]
     val q2 = CandleStream.runPipelineTx(in2.toDF(), table, s"$dir/ckpt2",
       triggerSecs = 1, watermark = "2 minutes")
@@ -103,7 +106,7 @@ class CandleStreamSpec extends SparkSpec {
       in2.addData(ws(5000, 999.0, 9.0), ws(360000, 130.0, 8.0))
       q2.processAllAvailable()
       val t2 = table.read()
-      // re-sent 13:45 closes again but the anti-join drops it; 13:51
+      // re-sent 13:45 closes again but insertIgnore drops it; 13:51
       // stays open -> table unchanged
       assert(t2.count() == 2)
       assert(t2.filter(col("time") === timestamp_millis(lit(t0)))

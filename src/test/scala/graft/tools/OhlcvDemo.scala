@@ -55,9 +55,11 @@ object OhlcvDemo {
     }
     val tasks = graft.ingest.Backfill.dayTasks(spark,
       Seq(("bitfinex", "BTC", "USD"), ("bitfinex", "BAD", "X")), 0L, 86400000L)
-    val (table, errs) = graft.ingest.Backfill.backfillInto(
-      base.limit(0), tasks, fetcher)
-    println(s"[demo] backfill: candles=${table.count()} errors=${errs.count()}")
+    val (candles, errs) = graft.ingest.Backfill.run(tasks, fetcher)
+    val table = new graft.storage.TxTable(spark, java.nio.file.Files.createTempDirectory("demo").toString)
+    table.insertIgnore(candles.withColumn("p_date", to_date($"time")),
+      Seq("exchange", "base_id", "quote_id", "time"))
+    println(s"[demo] backfill: candles=${table.read().count()} errors=${errs.count()}")
     errs.select("exchange", "symbol", "exception_message").show(2, truncate = false)
 
     // exact stateful closed-candle stream (transformWithState needs RocksDB)
