@@ -57,7 +57,16 @@ object Backfill {
       StructField("err_exchange", StringType, nullable = true),
       StructField("err_symbol", StringType, nullable = true)))
 
-  /** Run the fetch over task partitions; returns (candles, errors). */
+  /** Run the fetch over task partitions; returns (candles, errors).
+    *
+    * Eager: the fetch runs here, in one job, and its rows are held in
+    * a local checkpoint that both returned frames read. The commit's
+    * partition probe, its staged write and the errors write then
+    * reuse the fetched rows, so each task is fetched exactly once per
+    * call (≙ one pass over the reference's Redis to-fetch set) — a
+    * lazy lineage would re-fetch, and spend rate-limit weight, once
+    * per downstream action.
+    */
   def run(tasks: DataFrame, fetcher: Fetcher,
           parallelism: Int = 32): (DataFrame, DataFrame) = {
     val enc = RowEncoder.encoderFor(resultSchema)
@@ -75,7 +84,7 @@ object Backfill {
               String.valueOf(e.getMessage), t.exchange, s"${t.baseId}${t.quoteId}"))
         }
       }
-    }(enc)
+    }(enc).localCheckpoint(true)
     val candles = CandleOps.dedup(
       raw.filter(col("error").isNull).select(Schemas.ohlcvs.fieldNames.map(col): _*))
     val errors = raw.filter(col("error").isNotNull)

@@ -65,12 +65,24 @@ object Retrieval {
         .collect())(rrfEc)
     }.map(Await.result(_, Duration.Inf))
     val idType = lists.head.schema("id").dataType
+    // ids key the fold and break ties, so every list must carry one
+    // comparable runtime type: a Long 1 and an Int 1 would otherwise
+    // fuse as two documents, or fail mid-sort
+    val idClasses = collected.iterator.flatMap(_.iterator.map(_.get(0)))
+      .filter(_ != null).map(_.getClass).toSet
+    require(idClasses.size <= 1 && idClasses.forall(classOf[Comparable[_]].isAssignableFrom),
+      s"rrf: ids must share one comparable type, got ${idClasses.map(_.getName).mkString(", ")}")
     // fuse: per id, contribution count and NULL-skipping sum in list
     // order (insertion-ordered map keeps the fold deterministic)
     val acc = scala.collection.mutable.LinkedHashMap
       .empty[Any, (Long, Option[Double])]
     collected.foreach(_.foreach { row =>
-      val id = row.get(0)
+      // -0.0 and 0.0 are one id, as Spark groups them
+      val id = row.get(0) match {
+        case d: Double if d == 0.0d => 0.0d
+        case f: Float if f == 0.0f => 0.0f
+        case x => x
+      }
       val contrib: Option[Double] =
         if (row.isNullAt(1)) None
         else Some(1.0d / (k.toDouble + row.getDouble(1)))
@@ -86,6 +98,7 @@ object Retrieval {
       case (null, null) => 0
       case (null, _) => -1
       case (_, null) => 1
+      // one runtime type, required above
       case (x: Comparable[_], y) =>
         x.asInstanceOf[Comparable[Any]].compareTo(y)
     }

@@ -2,7 +2,9 @@ package graft.maintenance
 
 import graft.core.Schemas
 import graft.ops.{CandleOps, OhlcvAnalytics}
+import graft.storage.TxTable
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Materialized-view maintenance — the engine piece TimescaleDB gave
@@ -185,7 +187,7 @@ object AggregateMaintenance {
     * write path to pair with [[graft.streaming.CandleStream.runPipelineTx]];
     * plain [[writePartitioned]] stays for single-writer bulk jobs.
     */
-  def writePartitionedTx(df: DataFrame, table: graft.storage.TxTable,
+  def writePartitionedTx(df: DataFrame, table: TxTable,
                          timeCol: String = "bucket",
                          invalidate: Seq[graft.api.QueryCache] = Nil): Unit = {
     if (table.version < 0) {
@@ -193,29 +195,42 @@ object AggregateMaintenance {
       invalidate.foreach(_.invalidateAll()); return
     }
     // `dated` is retry-invariant (it never depends on `existing`) but
-    // is consumed by BOTH staged halves below and re-consumed on every
+    // is consumed by the partition probe, the staged write and every
     // conflict retry — without the checkpoint a refresh rollup's full
-    // lineage recomputes 2+ times per attempt (checkpoint-after-
-    // aggregation rule; the refresh output is post-aggregation).
+    // lineage recomputes per consumer (checkpoint-after-aggregation
+    // rule; the refresh output is post-aggregation).
     val dated = df.withColumn("p_date", to_date(col(timeCol))).localCheckpoint(false)
     val parts = table.touchedPartitions(dated)
+    val keys = CandleOps.keyCols :+ timeCol
     table.upsertRewritePartitions(parts) { existing =>
       // recompute-from-snapshot contract: the refreshed content for
       // these partitions is `dated` merged over what's now there —
       // rows for keys the refresh recomputed are replaced, concurrent
       // appends for other keys survive (upsert, queries.py:6-18).
-      // The split keeps the change feed honest: keys already present
-      // are reshaped content; keys new to the table are net-new rows
-      // the feed must deliver (TxLog readChangesSince contract).
-      val keys = CandleOps.keyCols :+ timeCol
-      val keyCols = keys.map(col)
-      val sortCols = (Seq("p_date") ++ CandleOps.keyCols :+ timeCol).map(col)
-      val reshaped = dated.join(existing.select(keyCols: _*), keys, "left_semi")
-        .sortWithinPartitions(sortCols: _*)
-        .unionByName(existing.join(dated.select(keyCols: _*), keys, "left_anti"))
-      val fresh = dated.join(existing.select(keyCols: _*), keys, "left_anti")
-        .sortWithinPartitions(sortCols: _*)
-      (reshaped, fresh)
+      // The tag keeps the change feed honest: keys already present
+      // are reshaped content (`u`); keys new to the table are net-new
+      // rows the feed must deliver (`n`, TxLog readChangesSince
+      // contract).
+      //
+      // One shuffle co-locates both sides per key, and a per-key
+      // window says which sides hold it. Unlike a full outer join it
+      // cannot multiply rows when either side repeats a key: every
+      // `dated` row is written once and replaces every existing row
+      // of its key, the semi/anti-join semantics. A null key matches
+      // nothing, as in an equi-join.
+      val keyed = keys.map(col(_).isNotNull).reduce(_ && _)
+      val byKey = Window.partitionBy(keys.map(col): _*)
+      def held(side: Column) = keyed && max(side).over(byKey)
+      val refreshed = col("__refreshed")
+      dated.withColumn("__refreshed", lit(true))
+        .unionByName(existing.withColumn("__refreshed", lit(false)))
+        .withColumn("__in_refresh", held(refreshed))
+        .withColumn("__in_table", held(!refreshed))
+        .filter(refreshed || !col("__in_refresh"))
+        .withColumn(TxTable.TagCol, when(refreshed && !col("__in_table"), "n").otherwise("u"))
+        .drop("__refreshed", "__in_refresh", "__in_table")
+        .sortWithinPartitions(
+          (Seq(col("p_date"), col(TxTable.TagCol)) ++ keys.map(col)): _*)
     }
     // same contract as writePartitioned: refreshed results surface now
     invalidate.foreach(_.invalidateAll())

@@ -242,13 +242,13 @@ class TxTable(val spark: SparkSession, val root: String,
     * Contribution is decided PER FILE by the delta op letter, not per
     * commit: `n` files hold rows never committed before — append
     * batches, [[insertIgnore]]'s conditional-append inserts, and the
-    * fresh half of [[upsertRewritePartitions]] — and are delivered;
+    * `n`-tagged rows of [[upsertRewritePartitions]] — and are delivered;
     * `+` files hold previously-delivered rows reshaped
     * (rewrite/compaction) and are skipped, since re-delivering them
     * would double-count in any downstream sum. (Legacy `+` lines
     * inside `#kind append` deltas count as net-new.) The one delivery
     * the feed does NOT make is in-place VALUE changes to an existing
-    * key (the reshaped half of an upserting rewrite): the feed's
+    * key (the `u`-tagged rows of an upserting rewrite): the feed's
     * contract is row-level inserts; update-aware consumers pair this
     * with [[changedPartitionsSince]] — the marker naming exactly the
     * partitions whose prior content was reshaped in the range, i.e.
@@ -258,6 +258,11 @@ class TxTable(val spark: SparkSession, val root: String,
     * feed reads the `n` file itself — vacuum retention must therefore
     * cover the feed consumer's lag, the same horizon contract as time
     * travel.
+    *
+    * The files are read under the schema recorded by the range's last
+    * delta, the same rule as [[readSnapshot]]: a file written before an
+    * additive evolution reads the new columns as null, and building the
+    * frame runs no footer-inference job.
     */
   def readChangesSince(sinceV: Long, untilV: Long = -1L): DataFrame = {
     val to = if (untilV < 0) version else untilV
@@ -281,6 +286,7 @@ class TxTable(val spark: SparkSession, val root: String,
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     else
       spark.read.option("basePath", root)
+        .schema(schema)
         .parquet(added.toSeq.map(f => s"$root/${f.path}"): _*)
   }
 
@@ -460,25 +466,35 @@ class TxTable(val spark: SparkSession, val root: String,
     }
     val out = scala.collection.mutable.LinkedHashMap
       .empty[String, scala.collection.mutable.ArrayBuffer[TxFile]]
-    val it = fs.listFiles(new org.apache.hadoop.fs.Path(staging), true)
-    while (it.hasNext) {
-      val f = it.next().getPath
-      if (f.getName.endsWith(".parquet")) {
-        val (partDir, tag) =
-          if (tagCol.isEmpty) (f.getParent, "") else (f.getParent.getParent, value(f.getParent))
-        val rel = s"data/${partDir.getName}/$uuid-${if (tag.isEmpty) "" else tag + "-"}${f.getName}"
-        val dest = new org.apache.hadoop.fs.Path(root, rel)
-        fs.mkdirs(dest.getParent)
-        if (!fs.rename(f, dest))
-          throw new java.io.IOException(s"failed to move staged file $f -> $dest")
-        out.getOrElseUpdate(tag, scala.collection.mutable.ArrayBuffer.empty) +=
-          TxFile(rel, value(partDir))
-      }
+    parquetFilesUnder(new org.apache.hadoop.fs.Path(staging)).foreach { st =>
+      val f = st.getPath
+      val (partDir, tag) =
+        if (tagCol.isEmpty) (f.getParent, "") else (f.getParent.getParent, value(f.getParent))
+      val rel = s"data/${partDir.getName}/$uuid-${if (tag.isEmpty) "" else tag + "-"}${f.getName}"
+      val dest = new org.apache.hadoop.fs.Path(root, rel)
+      fs.mkdirs(dest.getParent)
+      if (!fs.rename(f, dest))
+        throw new java.io.IOException(s"failed to move staged file $f -> $dest")
+      out.getOrElseUpdate(tag, scala.collection.mutable.ArrayBuffer.empty) +=
+        TxFile(rel, value(partDir))
     }
     fs.delete(new org.apache.hadoop.fs.Path(staging), true)
     computeStagedStats(out.valuesIterator.flatten.toSeq)
     out.view.mapValues(_.toSeq).toMap
   }
+
+  /** Every `.parquet` file below `dir`, recursing with plain
+    * `listStatus`: `listFiles(dir, true)` builds a LocatedFileStatus
+    * per entry, which on the local filesystem without native IO forks
+    * `ls -ld` to load its permissions.
+    */
+  private def parquetFilesUnder(dir: org.apache.hadoop.fs.Path)
+      : Seq[org.apache.hadoop.fs.FileStatus] =
+    fs.listStatus(dir).toSeq.flatMap { st =>
+      if (st.isDirectory) parquetFilesUnder(st.getPath)
+      else if (st.getPath.getName.endsWith(".parquet")) Seq(st)
+      else Nil
+    }
 
   /** Additive schema evolution on append (the public Delta
     * `mergeSchema` contract): the committed schema is the prior
@@ -587,10 +603,14 @@ class TxTable(val spark: SparkSession, val root: String,
     */
   private def stageInto(parts: Set[String], df: DataFrame, op: String): Seq[TxFile] = {
     val staged = stage(df)
+    requireWithin(parts, staged, op)
+    staged
+  }
+
+  private def requireWithin(parts: Set[String], staged: Seq[TxFile], op: String): Unit = {
     val bad = staged.filterNot(f => parts.contains(f.partition))
     require(bad.isEmpty,
       s"$op produced rows outside those partitions: ${bad.map(_.partition).distinct}")
-    staged
   }
 
   /** Throw [[TxConflictException]] if any commit in (readVersion, v]
@@ -716,21 +736,27 @@ class TxTable(val spark: SparkSession, val root: String,
   }
 
   /** [[rewritePartitions]] with the upsert split the change feed
-    * needs: `compute(current)` returns (reshaped, fresh) — rows that
-    * restate/reshape prior content vs rows that are genuinely NEW to
-    * the table. Both replace the partitions' files in one conflict-
-    * checked commit, but only the fresh files are marked `n` and
-    * delivered by [[readChangesSince]]. Use for refresh jobs that mix
-    * recomputed existing keys with newly-appeared keys.
+    * needs: `compute(current)` returns ONE frame whose [[TxTable.TagCol]]
+    * column marks each row `u` (restates/reshapes prior content) or
+    * `n` (genuinely NEW to the table). The frame is staged in one
+    * tagged write job ([[stageSplit]]; the tag is a staging level,
+    * never a table column) and replaces the partitions' files in one
+    * conflict-checked commit: `u` files as reshaped `+`, `n` files as
+    * `n`, the only ones [[readChangesSince]] delivers. Use for refresh
+    * jobs that mix recomputed existing keys with newly-appeared keys.
     */
   def upsertRewritePartitions(parts: Set[String], maxAttempts: Int = 20)
-                             (compute: DataFrame => (DataFrame, DataFrame)): Long =
+                             (compute: DataFrame => DataFrame): Long =
     withConflictRetry(maxAttempts) { () =>
       val (v, cur) = snapshotPartitions(parts)
-      val (reshaped, fresh) = compute(cur.getOrElse(uncommitted("upsertRewritePartitions")))
-      val stagedOld = stageInto(parts, reshaped, s"upsertRewritePartitions($parts)")
-      val stagedNew = stageInto(parts, fresh, s"upsertRewritePartitions($parts)")
-      commitRewrite(v, parts, stagedOld, reshaped.schema, freshAdds = stagedNew)
+      val tagged = compute(cur.getOrElse(uncommitted("upsertRewritePartitions")))
+      val staged = stageSplit(tagged, TagCol)
+      val op = s"upsertRewritePartitions($parts)"
+      require(staged.keySet.subsetOf(Set("u", "n")),
+        s"$op: $TagCol must be 'u' or 'n', got ${staged.keySet.mkString(", ")}")
+      requireWithin(parts, staged.valuesIterator.flatten.toSeq, op)
+      commitRewrite(v, parts, staged.getOrElse("u", Nil), tagged.drop(TagCol).schema,
+        freshAdds = staged.getOrElse("n", Nil))
     }
 
   /** Partition values present in `df` (small distinct collect — the
@@ -984,19 +1010,16 @@ class TxTable(val spark: SparkSession, val root: String,
     // skipped) or `n` (fresh file, feed-delivered).
     val mTag = matchedKeys.withColumn("__m", lit(true))
     val tagged = batchCk.join(broadcast(mTag), keys, "left")
-      .withColumn("__tag", when(col("__m").isNotNull, lit("u")).otherwise(lit("n")))
+      .withColumn(TagCol, when(col("__m").isNotNull, lit("u")).otherwise(lit("n")))
       .drop("__m")
-    val stagedF = Future(stageSplit(tagged, "__tag"))(TxTable.dmlEc)
+    val stagedF = Future(stageSplit(tagged, TagCol))(TxTable.dmlEc)
     val touchedF = Future(touchedPartitions(batchCk))(TxTable.dmlEc)
     val dvAdds = marksAt(snap, marked.select(col("__f").as("f"), col("__i").as("i")))
     val staged = Await.result(stagedF, Duration.Inf)
     val stagedUpd = staged.getOrElse("u", Seq.empty)
     val stagedNew = staged.getOrElse("n", Seq.empty)
     val parts = Await.result(touchedF, Duration.Inf) ++ dvAdds.map(_._1.partition)
-    val outside = (stagedUpd ++ stagedNew).filterNot(f => parts.contains(f.partition))
-    require(outside.isEmpty,
-      s"mergeInto staged rows outside the touched partitions: " +
-        s"${outside.map(_.partition).distinct}")
+    requireWithin(parts, stagedUpd ++ stagedNew, "mergeInto")
     if (dvAdds.isEmpty && stagedUpd.isEmpty && stagedNew.isEmpty) v
     else commitDvOps(v, dvAdds, stagedUpd, "merge", stagedNew,
       batchSchema = Some(batch.schema))
@@ -1082,16 +1105,11 @@ class TxTable(val spark: SparkSession, val root: String,
     val dataDir = new org.apache.hadoop.fs.Path(root, "data")
     if (fs.exists(dataDir)) {
       val qualifiedRoot = fs.makeQualified(rootPath).toString
-      val it = fs.listFiles(dataDir, true)
-      val doomed = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.Path]
-      while (it.hasNext) {
-        val st = it.next()
-        val f = st.getPath
-        val rel = fs.makeQualified(f).toString.stripPrefix(qualifiedRoot + "/")
-        if (f.getName.endsWith(".parquet") && !live.contains(rel) &&
-            st.getModificationTime <= ageCutoff) doomed += f
+      val doomed = parquetFilesUnder(dataDir).filter { st =>
+        val rel = fs.makeQualified(st.getPath).toString.stripPrefix(qualifiedRoot + "/")
+        !live.contains(rel) && st.getModificationTime <= ageCutoff
       }
-      doomed.foreach { f => if (fs.delete(f, false)) deleted += 1 }
+      doomed.foreach { st => if (fs.delete(st.getPath, false)) deleted += 1 }
     }
     // Consolidate the LIVE files' stats into one horizon sidecar
     // before pruning the per-commit ones (the checkpoint pattern —
@@ -1240,6 +1258,11 @@ class TxTable(val spark: SparkSession, val root: String,
 
 object TxTable {
   val LogDirName = "_graft_log"
+
+  /** The staging tag column of [[TxTable.upsertRewritePartitions]]'s
+    * frame: `u` for reshaped prior content, `n` for net-new rows.
+    */
+  val TagCol = "__tag"
 
   /** Default vacuum age horizon: 7 days, the public Delta `VACUUM`
     * default. Files younger than this are never deleted even when

@@ -2,6 +2,7 @@ package graft.ingest
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Page server with the real API's shape: at most `limit` rows from
   * `startMs`, one per minute, within the symbol's listed range.
@@ -24,6 +25,23 @@ class FakePagedApi(dataStart: Long, dataEnd: Long) extends RestCursors.PageFetch
 
 object FakePagedApi {
   val requests = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Int, String)]
+}
+
+/** A [[FakeExchange]]-shaped fetcher that counts fetches per task in a
+  * JVM-static map (local-mode executors share the JVM).
+  */
+class CountingExchange extends Backfill.Fetcher {
+  override def fetch(t: Backfill.Task) = {
+    CountingExchange.calls.computeIfAbsent(t, _ => new java.util.concurrent.atomic.AtomicInteger)
+      .incrementAndGet()
+    if (t.baseId == "BAD") throw new RuntimeException("HTTP 429 rate limited")
+    (t.startMs until t.endMs by 60000L).map(ts => (ts, 1d, 1d, 1d, 1d, 1d))
+  }
+}
+
+object CountingExchange {
+  val calls = new java.util.concurrent.ConcurrentHashMap[
+    Backfill.Task, java.util.concurrent.atomic.AtomicInteger]
 }
 
 class BackfillSpec extends SparkSpec {
@@ -74,6 +92,23 @@ class BackfillSpec extends SparkSpec {
     assert(err.head.getAs[String]("exchange") == "bitfinex")
     assert(err.head.getAs[String]("symbol") == "BADX")
     assert(err.head.getAs[String]("exception_message").contains("429"))
+  }
+
+  test("one backfill pass fetches each task once across the commit and the errors write") {
+    CountingExchange.calls.clear()
+    val keys = Seq(("bitfinex", "BTC", "USD"), ("bitfinex", "ETH", "USD"), ("bitfinex", "BAD", "X"))
+    val tasks = Backfill.dayTasks(spark, keys, 0L, 2 * 86400000L)
+    // Main.backfill's sequence: run, the insertIgnore commit (partition
+    // probe + staged write), then the errors side-channel write
+    val (candles, errors) = Backfill.run(tasks, new CountingExchange)
+    val t = new graft.storage.TxTable(spark, java.nio.file.Files.createTempDirectory("bf1").toString)
+    t.insertIgnore(candles.withColumn("p_date", to_date(col("time"))),
+      Seq("exchange", "base_id", "quote_id", "time"))
+    errors.write.parquet(java.nio.file.Files.createTempDirectory("bf1err").resolve("e").toString)
+    assert(t.read().count() === 2 * 2 * 1440)
+    val calls = CountingExchange.calls.asScala.map { case (task, n) => task -> n.get }.toMap
+    assert(calls.size === keys.size * 2, s"every day task fetched: $calls")
+    assert(calls.values.forall(_ == 1), s"each task fetched exactly once: $calls")
   }
 
   test("bitfinex cursor pager == day-task paging rows; hist/last switch at asOf-60s") {

@@ -39,6 +39,23 @@ class RetrievalSpec extends SparkSpec {
     assert(got === Map(3L -> 1, 5L -> 2, 1L -> 3))
   }
 
+  test("rrf: -0.0 and 0.0 are one id") {
+    val a = Seq((-0.0d, 1), (1.0d, 2)).toDF("id", "rank")
+    val b = Seq((0.0d, 1)).toDF("id", "rank")
+    val got = Retrieval.rrf(Seq(a, b), topK = 10)
+      .collect().map(r => (r.getDouble(0), r.getLong(1), r.getDouble(2)))
+    assert(got.length === 2)
+    assert(got.head === ((0.0d, 2L, c(1) + c(1))))
+    assert(java.lang.Double.doubleToRawLongBits(got.head._1) === 0L, "the fused id is +0.0")
+  }
+
+  test("rrf: lists with different id types are refused") {
+    val a = Seq((1L, 1)).toDF("id", "rank")
+    val b = Seq((1, 1)).toDF("id", "rank")
+    val e = intercept[IllegalArgumentException](Retrieval.rrf(Seq(a, b), topK = 10))
+    assert(e.getMessage.contains("one comparable type"))
+  }
+
   test("rrf: topK caps the output after fusion ordering") {
     val a = (1L to 5L).map(i => (i, i.toInt)).toDF("id", "rank")
     val got = Retrieval.rrf(Seq(a), topK = 2).collect().map(_.getLong(0))

@@ -51,6 +51,47 @@ class FeedRefreshSpec extends SparkSpec {
     assert(asSet(again) === asSet(refreshed) && cursor3 === cursor2)
   }
 
+  /** (result of `body`, Spark jobs started while it ran). A marker
+    * job afterwards flushes the listener bus, which delivers events in
+    * order, so every earlier job start has been counted by then.
+    */
+  private def jobsDuring[A](body: => A): (A, Int) = {
+    val starts = new java.util.concurrent.atomic.AtomicInteger
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == "jobsDuring.marker"))
+          markerSeen.countDown()
+        else starts.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val out = body
+      spark.sparkContext.setJobGroup("jobsDuring.marker", "listener bus flush")
+      try spark.range(1).count() finally spark.sparkContext.clearJobGroup()
+      assert(markerSeen.await(30, java.util.concurrent.TimeUnit.SECONDS), "marker job never seen")
+      (out, starts.get)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("the change feed reads under the log's schema across an additive evolution, with no job") {
+    import graft.SparkSpec.spark.implicits._
+    val t = freshTable()
+    def batch(ids: Range) =
+      ids.map(i => (i.toLong, java.sql.Date.valueOf("2021-01-01"))).toDF("id", "p_date")
+    t.append(batch(0 until 5))
+    val cursor = t.version
+    t.append(batch(5 until 8))                                    // before the evolution
+    t.append(batch(8 until 10).withColumn("source", lit("ws")))  // adds `source`
+    val (feed, jobs) = jobsDuring(t.readChangesSince(cursor))
+    assert(jobs === 0, "building the feed frame must not infer a schema with a Spark job")
+    assert(feed.schema === t.read().schema)
+    assert(feed.filter(col("source").isNull).select("id").as[Long].collect().sorted.toSeq
+      === (5L until 8L), "files written before the evolution read the new column as null")
+    assert(feed.filter(col("source") === "ws").select("id").as[Long].collect().sorted.toSeq
+      === Seq(8L, 9L))
+  }
+
   test("a deep backfill append refreshes its old buckets (window policy can't)") {
     val t = freshTable()
     val fx = OhlcvFixture.ohlcvs(spark, nPairs = 1, rows = 100)

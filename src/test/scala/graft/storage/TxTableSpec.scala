@@ -89,7 +89,8 @@ class TxTableSpec extends SparkSpec {
     // upsertRewritePartitions: reshape ids 0..7, introduce 100..102
     val freshRows = rows(100 until 103, "2021-01-01")
     t.upsertRewritePartitions(Set("2021-01-01")) { cur =>
-      (cur.withColumn("v", upper(col("v"))), freshRows)  // v2
+      cur.withColumn("v", upper(col("v"))).withColumn(TxTable.TagCol, lit("u"))
+        .unionByName(freshRows.withColumn(TxTable.TagCol, lit("n")))  // v2
     }
     val afterV1 = t.readChangesSince(1).select("id").collect().map(_.getLong(0)).sorted
     assert(afterV1.toSeq === Seq(100L, 101L, 102L),
@@ -106,6 +107,52 @@ class TxTableSpec extends SparkSpec {
       "upserting rewrite must mark its partition for re-read")
     assert(t.changedPartitionsSince(0, 1) === Set.empty,
       "insertIgnore inserts are net-new — no partition to re-read")
+  }
+
+  test("tagged refresh upsert equals the semi/anti-join form row for row on repeated keys") {
+    val t = freshTable()
+    val keys = Seq("exchange", "base_id", "quote_id", "bucket")
+    def candles(rs: (String, Int, Double)*) = rs.map { case (base, minute, close) =>
+      ("binance", base, "USDT", java.sql.Timestamp.valueOf(f"2021-01-01 00:$minute%02d:00"), close)
+    }.toDF("exchange", "base_id", "quote_id", "bucket", "close")
+    def dated(df: org.apache.spark.sql.DataFrame) = df.withColumn("p_date", to_date(col("bucket")))
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.select((keys :+ "close" :+ "p_date").map(col): _*).collect().map(_.toString).sorted.toSeq
+    graft.maintenance.AggregateMaintenance.writePartitionedTx(
+      candles(("BTC", 0, 1.0), ("BTC", 1, 1.0), ("ETH", 0, 1.0), (null, 0, 1.0)), t)
+    t.append(dated(candles(("BTC", 0, 2.0), ("ETH", 0, 2.0))))  // the table repeats two keys
+    val before = t.version
+    // the refresh repeats a key too, brings two new keys, and a null
+    // key that (as in an equi-join) matches nothing
+    val refresh = candles(("BTC", 0, 9.0), ("BTC", 0, 8.0), ("ETH", 5, 9.0), ("SOL", 0, 9.0),
+      (null, 0, 9.0))
+    val existing = t.read()
+    val kc = keys.map(col)
+    val semiAnti = sorted(dated(refresh).join(existing.select(kc: _*), keys, "left_semi")
+      .unionByName(existing.join(dated(refresh).select(kc: _*), keys, "left_anti"))
+      .unionByName(dated(refresh).join(existing.select(kc: _*), keys, "left_anti")))
+    assert(semiAnti.size === 9)
+
+    graft.maintenance.AggregateMaintenance.writePartitionedTx(refresh, t)
+    assert(sorted(t.read()) === semiAnti)
+    // only the refresh rows whose key the table lacked are net-new
+    assert(sorted(t.readChangesSince(before)) ===
+      sorted(dated(candles(("ETH", 5, 9.0), ("SOL", 0, 9.0), (null, 0, 9.0)))))
+    assert(t.changedPartitionsSince(before) === Set("2021-01-01"))
+    assert(t.read().schema.fieldNames.toSeq === dated(refresh).columns.toSeq,
+      "the staging tag is not a table column")
+  }
+
+  test("upsertRewritePartitions fails a compute that emits rows outside its partitions") {
+    val t = freshTable()
+    t.append(rows(0 until 3, "2021-01-01"))
+    val e = intercept[IllegalArgumentException] {
+      t.upsertRewritePartitions(Set("2021-01-01")) { cur =>
+        cur.unionByName(rows(5 until 6, "2021-01-02")).withColumn(TxTable.TagCol, lit("u"))
+      }
+    }
+    assert(e.getMessage.contains("outside those partitions"))
+    assert(t.version === 0 && t.read().count() === 3)
   }
 
   test("changedPartitionsSince marks rewrites/compactions, never appends") {
