@@ -1,10 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionDescription, TernaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionDescription, Literal, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
 import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.types.{DataType, TimestampType}
+import org.apache.spark.sql.types.{DataType, LongType, TimestampType}
 
 /** Native Catalyst implementation of TimescaleDB's
   * `time_bucket(width, ts, origin)` (reference
@@ -34,7 +34,6 @@ case class TimeBucket(time: Expression, widthUs: Expression, originUs: Expressio
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
     import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
-    import org.apache.spark.sql.types.LongType
     if (time.dataType != TimestampType)
       TypeCheckFailure(s"time_bucket: first argument must be TIMESTAMP, got ${time.dataType.sql}")
     else if (widthUs.dataType != LongType || originUs.dataType != LongType)
@@ -47,9 +46,25 @@ case class TimeBucket(time: Expression, widthUs: Expression, originUs: Expressio
     Math.floorDiv(us - ou, wu) * wu + ou
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (t, w, o) =>
-      s"${ev.value} = java.lang.Math.floorDiv($t - $o, $w) * $w + $o;")
+  /** A constant width and origin are read from the plan's reference
+    * objects into fields, not inlined as literals, so the generated code
+    * is the same for every width: a job bucketing at several widths
+    * (the 8 rollup refreshes) compiles each stage shape once and keeps
+    * the codegen cache warm instead of evicting one width for another.
+    */
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    def field(e: Expression, name: String): Option[String] = e match {
+      case Literal(v: Long, LongType) =>
+        val ref = ctx.addReferenceObj(name, v, "java.lang.Long")
+        Some(ctx.addMutableState(CodeGenerator.JAVA_LONG, name, f => s"$f = $ref.longValue();"))
+      case _ => None
+    }
+    val (wField, oField) = (field(widthUs, "bucketWidthUs"), field(originUs, "bucketOriginUs"))
+    nullSafeCodeGen(ctx, ev, (t, wExpr, oExpr) => {
+      val (w, o) = (wField.getOrElse(wExpr), oField.getOrElse(oExpr))
+      s"${ev.value} = java.lang.Math.floorDiv($t - $o, $w) * $w + $o;"
+    })
+  }
 
   override protected def withNewChildrenInternal(
       newFirst: Expression, newSecond: Expression, newThird: Expression): Expression =

@@ -3,19 +3,28 @@ package graft.maintenance
 import graft.core.Schemas
 import graft.ops.{CandleOps, OhlcvAnalytics}
 import graft.storage.TxTable
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import java.sql.Timestamp
+import java.time.ZoneId
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Observation, Row}
+import org.apache.spark.sql.catalyst.expressions.InSet
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.concurrent.Await
+import scala.concurrent.duration._
 
 /** Materialized-view maintenance — the engine piece TimescaleDB gave
   * the reference for free (continuous aggregates + refresh policies,
   * create.sql:105-223, :345-383) and Spark does not have. SURVEY §4
   * marks this as the core custom engineering.
   *
-  * Storage-agnostic: jobs take/return DataFrames; [[writePartitioned]]
-  * shows the 100 TB layout (partition by bucket date → incremental
-  * refresh rewrites only the touched date partitions via dynamic
-  * partition overwrite, never the whole table).
+  * Jobs take/return DataFrames. Rollups are partitioned by bucket
+  * date, and the incremental write path is O(feed):
+  * [[refreshFromFeed]] recomputes only the buckets the base table's
+  * new rows touched, from only the base partitions those buckets
+  * span, and [[writePartitionedTx]] upserts them, rewriting only the
+  * date partitions they fall in ([[writePartitioned]] is the plain
+  * dynamic-overwrite form for single-writer bulk jobs).
   */
 object AggregateMaintenance {
 
@@ -49,20 +58,39 @@ object AggregateMaintenance {
     * ([[graft.storage.TxTable.readChangesSince]] — the feed reads only
     * the append-commit files of the version range, so discovering
     * WHAT to refresh is O(new data) even when the base table is
-    * 100 TB; the recompute itself then prunes to those buckets). This
-    * closes the loop the time-window policy approximates: instead of
-    * "recompute the trailing 3 widths and hope lag fits", the refresh
-    * is driven by exactly what landed, however stale — a backfill
-    * append from last year refreshes last year's buckets and nothing
-    * else. Returns the refreshed rollup plus the version to hand back
-    * as the next `sinceV` (the feed's cursor).
+    * 100 TB). This closes the loop the time-window policy
+    * approximates: instead of "recompute the trailing 3 widths and
+    * hope lag fits", the refresh is driven by exactly what landed,
+    * however stale — a backfill append from last year refreshes last
+    * year's buckets and nothing else.
+    *
+    * Returns ONLY the recomputed buckets (every key of each touched
+    * bucket), plus the version to hand back as the next `sinceV` (the
+    * feed's cursor). Pair it with [[writePartitionedTx]]: that write is
+    * an upsert, so rollup rows of untouched buckets stay in their
+    * partitions and only the date partitions of the fresh buckets are
+    * rewritten. `existing` only supplies the schema of the empty frame
+    * an empty feed returns, which commits nothing.
+    *
+    * The recompute scans only the snapshot files of the base dates the
+    * touched buckets span, so `base` must be partitioned by the date
+    * of `time` in the session time zone (`p_date = to_date(time)`, the
+    * layout every writer of candle tables here uses).
     */
-  def refreshFromFeed(existing: DataFrame, base: graft.storage.TxTable,
+  def refreshFromFeed(existing: DataFrame, base: TxTable,
                       sinceV: Long, widthSec: Long): (DataFrame, Long) = {
     val untilV = base.version
-    val feed = base.readChangesSince(sinceV, untilV)
-    (refreshBuckets(existing, base.readSnapshot(base.snapshot(untilV)), feed,
-      widthSec), untilV)
+    val snap = base.snapshot(untilV)
+    val zone = ZoneId.of(base.spark.conf.get("spark.sql.session.timeZone"))
+    def day(t: Timestamp) = t.toInstant.atZone(zone).toLocalDate.toString
+    val fresh = recomputeTouched(base.readChangesSince(sinceV, untilV), widthSec) { (lo, end) =>
+      // ISO dates order as strings
+      val (first, last) = (day(lo), day(new Timestamp(end.getTime - 1)))
+      base.readSnapshot(snap.copy(
+        files = snap.files.filter(f => f.partition >= first && f.partition <= last)))
+    }
+    (fresh.fold(base.spark.createDataFrame(
+      base.spark.sparkContext.emptyRDD[Row], existing.schema))(_._2), untilV)
   }
 
   /** Refresh exactly the rollup buckets a micro-batch touched: the
@@ -72,26 +100,42 @@ object AggregateMaintenance {
     * trigger is O(batch), not O(table).
     */
   def refreshBuckets(existing: DataFrame, base: DataFrame, batch: DataFrame,
-                     widthSec: Long): DataFrame = {
-    // ONE driver action per trigger: the micro-batch's distinct touched
-    // buckets are O(batch span / width) — a handful of timestamps, the
-    // same legitimate driver state as broadcast-join build sides. With
-    // the set in hand, both the base prune and the bucket membership
-    // tests become literal predicates (codegen'd, file-stats-skippable,
-    // partition-prunable), replacing a separate bounds job plus two
-    // broadcast joins that each re-evaluated `touched`.
-    val touched = batch
+                     widthSec: Long): DataFrame =
+    recomputeTouched(batch, widthSec) { (lo, end) =>
+      base.filter(col("time") >= lit(lo) && col("time") < lit(end))
+    }.fold(existing) {
+      case (touched, fresh) =>
+        existing.filter(!col("bucket").isInCollection(touched)).unionByName(fresh)
+    }
+
+  /** The touched-bucket recompute both refreshes share: (the distinct
+    * buckets `feed` touches, those buckets rolled up afresh from
+    * `baseOver(lo, end)`, which must hold every base row of
+    * [lo, end)), or None for an empty feed.
+    *
+    * ONE driver action: the feed's distinct touched buckets are
+    * O(feed span / width) — a handful of timestamps, the same
+    * legitimate driver state as broadcast-join build sides. With the
+    * set in hand the caller prunes `baseOver` to the span (files or
+    * rows), and the exact bucket membership is an `InSet`: a hash
+    * probe whose values the generated code references rather than
+    * inlines (`In`, which `isin` builds for up to 10 values, inlines
+    * them), so repeated refreshes of one rollup reuse its compiled
+    * scan instead of compiling a new one per touched set.
+    */
+  private def recomputeTouched(feed: DataFrame, widthSec: Long)(
+      baseOver: (Timestamp, Timestamp) => DataFrame): Option[(Seq[Timestamp], DataFrame)] = {
+    val touched = feed
       .select(bucketOf(col("time"), widthSec).as("bucket")).distinct()
-      .collect().map(_.getTimestamp(0))
-    if (touched.isEmpty) return existing
-    val (lo, hi) = (touched.min, touched.max)
-    val pruned = base.filter(col("time") >= lit(lo) &&
-      col("time") < lit(hi) + expr(s"interval $widthSec seconds"))
-    val fresh = CandleOps.rollup(
-      pruned.filter(bucketOf(col("time"), widthSec).isInCollection(touched.toIndexedSeq)),
-      widthSec)
-    existing.filter(!col("bucket").isInCollection(touched.toIndexedSeq))
-      .unionByName(fresh)
+      .collect().map(_.getTimestamp(0)).toIndexedSeq
+    if (touched.isEmpty) None
+    else {
+      val (lo, end) = (touched.min, new Timestamp(touched.max.getTime + widthSec * 1000))
+      val inTouched = GraftBridge.column(InSet(
+        GraftBridge.expression(bucketOf(col("time"), widthSec)),
+        touched.map(t => DateTimeUtils.fromJavaTimestamp(t): Any).toSet))
+      Some(touched -> CandleOps.rollup(baseOver(lo, end).filter(inTouched), widthSec))
+    }
   }
 
   /** Daily job (reference scripts/database/cron/daily.sql): refresh
@@ -180,11 +224,13 @@ object AggregateMaintenance {
     invalidate.foreach(_.invalidateAll())
   }
 
-  /** [[writePartitioned]] through a transaction log: replaces exactly
-    * the date partitions `df` covers, conflict-checked against
-    * concurrent appends (a streaming batch landing mid-refresh makes
-    * this retry and fold it in — TxLog.scala). This is the refresh
-    * write path to pair with [[graft.streaming.CandleStream.runPipelineTx]];
+  /** [[writePartitioned]] through a transaction log: upserts `df` into
+    * exactly the date partitions it covers (rows of keys `df` lacks
+    * survive there), conflict-checked against concurrent appends (a
+    * streaming batch landing mid-refresh makes this retry and fold it
+    * in — TxLog.scala). An empty `df` on a committed table publishes
+    * nothing. This is the refresh write path to pair with
+    * [[refreshFromFeed]] and [[graft.streaming.CandleStream.runPipelineTx]];
     * plain [[writePartitioned]] stays for single-writer bulk jobs.
     */
   def writePartitionedTx(df: DataFrame, table: TxTable,
@@ -195,12 +241,25 @@ object AggregateMaintenance {
       invalidate.foreach(_.invalidateAll()); return
     }
     // `dated` is retry-invariant (it never depends on `existing`) but
-    // is consumed by the partition probe, the staged write and every
-    // conflict retry — without the checkpoint a refresh rollup's full
-    // lineage recomputes per consumer (checkpoint-after-aggregation
-    // rule; the refresh output is post-aggregation).
-    val dated = df.withColumn("p_date", to_date(col(timeCol))).localCheckpoint(false)
-    val parts = table.touchedPartitions(dated)
+    // is consumed by the staged write and every conflict retry —
+    // without the checkpoint a refresh rollup's full lineage
+    // recomputes per consumer (checkpoint-after-aggregation rule; the
+    // refresh output is post-aggregation). The partition census rides
+    // the checkpoint job as an observed metric instead of running a
+    // distinct+collect of its own.
+    val census = Observation()
+    val dated = df.withColumn("p_date", to_date(col(timeCol)))
+      .observe(census, count(lit(1)).as("rows"),
+        collect_set(col("p_date").cast("string")).as("parts"))
+      .localCheckpoint(true)
+    // the observation lands through the listener bus just after the
+    // job; a bounded wait turns a lost event into an error, not a hang
+    val observed = Await.result(census.future, 2.minutes)
+    // an empty refresh publishes no version, like insertIgnore's
+    // fully-duplicate batch: a no-op commit only widens the vacuum and
+    // time-travel window
+    if (observed.getAs[Long]("rows") == 0) return
+    val parts = observed.getAs[Seq[String]]("parts").toSet
     val keys = CandleOps.keyCols :+ timeCol
     table.upsertRewritePartitions(parts) { existing =>
       // recompute-from-snapshot contract: the refreshed content for

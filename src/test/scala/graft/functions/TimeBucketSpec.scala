@@ -1,6 +1,7 @@
 package graft.functions
 
 import graft.SparkSpec
+import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.functions._
 
 class TimeBucketSpec extends SparkSpec {
@@ -45,5 +46,25 @@ class TimeBucketSpec extends SparkSpec {
     // our expression must sit inside a starred Project (no fallback)
     assert(plan.contains("*(1) Project [timebucket"), plan)
     assert(df.distinct().count() == 2) // 10 minutes -> two 5-min buckets
+  }
+
+  test("every constant width shares one compiled class; a computed width buckets the same") {
+    val cm = org.apache.spark.metrics.source.CodegenMetrics
+    val ts = timestamp_seconds(col("id") * 7919 + 13)
+    def buckets(width: Long) = spark.range(500)
+      .select(TimeBucket.timeBucket(ts, width, 946857600L).cast("long").as("b"))
+      .distinct().collect().map(_.getLong(0)).toSet
+    def expected(width: Long) = (0L until 500L)
+      .map(i => Math.floorDiv(i * 7919 + 13 - 946857600L, width) * width + 946857600L).toSet
+    assert(buckets(300L) === expected(300L))   // compiles this shape
+    val compiled = cm.METRIC_COMPILATION_TIME.getCount
+    assert(buckets(3600L) === expected(3600L))
+    assert(cm.METRIC_COMPILATION_TIME.getCount === compiled,
+      "a second width must reuse the first width's generated code")
+    val computed = spark.range(500).select(GraftBridge.column(TimeBucket(
+        GraftBridge.expression(ts), GraftBridge.expression(col("id") * 0 + 3600000000L),
+        GraftBridge.expression(lit(946857600000000L)))).cast("long").as("b"))
+      .distinct().collect().map(_.getLong(0)).toSet
+    assert(computed === expected(3600L))
   }
 }

@@ -7,10 +7,12 @@ import graft.storage.TxTable
 import org.apache.spark.sql.functions._
 
 /** Change-feed-driven rollup refresh: after any sequence of appends,
-  * [[AggregateMaintenance.refreshFromFeed]] must land the rollup in
-  * the same state as a full recompute — including the backfill case
-  * (an append far in the past) that the trailing-window policy
-  * structurally misses.
+  * [[AggregateMaintenance.refreshFromFeed]] written through
+  * [[AggregateMaintenance.writePartitionedTx]] must land the rollup
+  * table in the same state as a full recompute — including the
+  * backfill case (an append far in the past) that the trailing-window
+  * policy structurally misses — while rewriting only what the feed
+  * touched.
   */
 class FeedRefreshSpec extends SparkSpec {
 
@@ -19,6 +21,23 @@ class FeedRefreshSpec extends SparkSpec {
       java.nio.file.Files.createTempDirectory("feedrefresh").toString)
 
   private def fullRollup(t: TxTable) = CandleOps.rollup(t.read(), 3600L)
+
+  /** A 1 h rollup table holding the full rollup of `base` now. */
+  private def rollupTable(base: TxTable): TxTable = {
+    val r = freshTable()
+    AggregateMaintenance.writePartitionedTx(fullRollup(base), r)
+    r
+  }
+
+  /** One maintenance step: refresh `roll` from `base`'s feed since
+    * `cursor` and write it back; returns the next cursor.
+    */
+  private def refresh(roll: TxTable, base: TxTable, cursor: Long): Long = {
+    val (fresh, next) =
+      AggregateMaintenance.refreshFromFeed(roll.read().drop("p_date"), base, cursor, 3600L)
+    AggregateMaintenance.writePartitionedTx(fresh, roll)
+    next
+  }
 
   // volume is an FP sum whose partition order differs between the
   // incremental and full plans — compare at 1e-6, like the rollup
@@ -30,6 +49,8 @@ class FeedRefreshSpec extends SparkSpec {
       case x => x
     }).toSet
 
+  private def rows(roll: TxTable) = asSet(roll.read().drop("p_date"))
+
   test("feed-driven refresh equals full recompute across multi-version appends") {
     val t = freshTable()
     val fx = OhlcvFixture.ohlcvs(spark, nPairs = 2, rows = 300)
@@ -37,18 +58,20 @@ class FeedRefreshSpec extends SparkSpec {
     val Array(b1, b2, b3) = Array(0, 1, 2).map(i => fx.filter(pmod(hash(col("time")), lit(3)) === i))
 
     t.append(b1)
-    var roll = fullRollup(t)
-    var cursor = t.version
+    val roll = rollupTable(t)
+    val cursor = t.version
 
     t.append(b2) // two separate commits -> two feed versions
     t.append(b3)
-    val (refreshed, cursor2) = AggregateMaintenance.refreshFromFeed(roll, t, cursor, 3600L)
-    assert(asSet(refreshed) === asSet(fullRollup(t)))
+    val cursor2 = refresh(roll, t, cursor)
+    assert(rows(roll) === asSet(fullRollup(t)))
     assert(cursor2 === t.version)
 
-    // nothing new: refresh is a no-op and the cursor stays
-    val (again, cursor3) = AggregateMaintenance.refreshFromFeed(refreshed, t, cursor2, 3600L)
-    assert(asSet(again) === asSet(refreshed) && cursor3 === cursor2)
+    // nothing new: the empty refresh publishes no rollup version and
+    // the cursor stays
+    val rollV = roll.version
+    val cursor3 = refresh(roll, t, cursor2)
+    assert(roll.version === rollV && cursor3 === cursor2)
   }
 
   /** (result of `body`, Spark jobs started while it ran). A marker
@@ -97,7 +120,7 @@ class FeedRefreshSpec extends SparkSpec {
     val fx = OhlcvFixture.ohlcvs(spark, nPairs = 1, rows = 100)
       .withColumn("p_date", to_date(col("time")))
     t.append(fx)
-    val roll = fullRollup(t)
+    val roll = rollupTable(t)
     val cursor = t.version
 
     // backfill a year earlier than everything else
@@ -105,8 +128,30 @@ class FeedRefreshSpec extends SparkSpec {
       .withColumn("time", col("time") - expr("interval 365 days"))
       .withColumn("p_date", to_date(col("time")))
     t.append(old)
-    val (refreshed, _) = AggregateMaintenance.refreshFromFeed(roll, t, cursor, 3600L)
-    assert(asSet(refreshed) === asSet(fullRollup(t)),
+    refresh(roll, t, cursor)
+    assert(rows(roll) === asSet(fullRollup(t)),
       "backfilled buckets a year back must be refreshed")
+  }
+
+  test("a refresh rewrites only the date partitions the feed touched, in at most 6 jobs") {
+    val t = freshTable()
+    // 2 h of candles on each of three dates
+    val day = OhlcvFixture.ohlcvs(spark, nPairs = 2, rows = 120)
+    def shifted(by: String) = day.withColumn("time", col("time") + expr(s"interval $by"))
+      .withColumn("p_date", to_date(col("time")))
+    t.append(shifted("0 days").unionByName(shifted("1 days")).unionByName(shifted("2 days")))
+    val roll = rollupTable(t)
+    val cursor = t.version
+    def filesOf(dates: Set[String]) =
+      roll.snapshot(roll.version).files.filter(f => dates.contains(f.partition)).toSet
+    val untouched = Set("2021-08-18", "2021-08-20")
+    val before = filesOf(untouched)
+    assert(before.map(_.partition) === untouched)
+
+    t.append(shifted("1 days 3 hours")) // new keys on the middle date only
+    val (_, jobs) = jobsDuring(refresh(roll, t, cursor))
+    assert(filesOf(untouched) === before, "untouched date partitions must keep their files")
+    assert(rows(roll) === asSet(fullRollup(t)))
+    assert(jobs <= 6, s"refresh + write ran $jobs Spark jobs")
   }
 }
