@@ -1,5 +1,6 @@
 package graft
 
+import graft.api.OhlcvHttpServer.jsonField
 import graft.ingest.{Backfill, JdbcCandleSink, RestCursors}
 import graft.storage.TxTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -381,17 +382,6 @@ class ParquetPageFetcher(spark: SparkSession, path: String)
   *    → `[{"startsAt": iso, "open": "...", ...}, ...]` (bittrex.py:113)
   */
 class HttpPageFetcher(exchange: String) extends RestCursors.PageFetcher {
-
-  /** Flat-object JSON field (string/number) — enough for the Bittrex
-    * candle objects; no JSON library on the fetch path.
-    */
-  private def jsonField(s: String, key: String): Option[String] = {
-    val m = java.util.regex.Pattern
-      .compile("\"" + java.util.regex.Pattern.quote(key) +
-        "\"\\s*:\\s*(\"((?:[^\"\\\\]|\\\\.)*)\"|[^,}\\s]+)")
-      .matcher(s)
-    if (m.find()) Option(m.group(2)).orElse(Option(m.group(1))) else None
-  }
 
   def fetchPage(t: Backfill.Task, startMs: Long, limit: Int,
                 section: String): Seq[RestCursors.Candle] = {

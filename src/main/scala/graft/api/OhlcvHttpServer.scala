@@ -134,10 +134,11 @@ object OhlcvHttpServer {
   }
 
   /** Minimal flat-object JSON field extraction (string/number/bool) —
-    * enough for the reference's subscribe messages; no JSON library
-    * on the serving path.
+    * enough for the reference's subscribe messages and the Bittrex
+    * candle objects `Main`'s page fetcher parses; no JSON library on
+    * the serving or fetch path.
     */
-  private[api] def jsonField(s: String, key: String): Option[String] = {
+  private[graft] def jsonField(s: String, key: String): Option[String] = {
     val m = java.util.regex.Pattern
       .compile("\"" + java.util.regex.Pattern.quote(key) +
         "\"\\s*:\\s*(\"((?:[^\"\\\\]|\\\\.)*)\"|[^,}\\s]+)")

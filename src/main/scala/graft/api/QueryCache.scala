@@ -80,7 +80,7 @@ class QueryCache(ttlSeconds: Long = QueryCache.defaultTtlSeconds,
   def size: Int = entries.synchronized(entries.size())
 
   /** Drop everything — wired into the refresh jobs
-    * (AggregateMaintenance.writePartitioned*) so rollup refreshes
+    * (AggregateMaintenance.writePartitionedTx) so rollup refreshes
     * surface immediately instead of riding out the 2 h TTL the
     * reference tolerates.
     */

@@ -1,6 +1,7 @@
 package graft.catalog
 
 import graft.core.Tables
+import graft.functions.TimeBucket
 import graft.ops.{Analytics, TimeSeries}
 import graft.catalog.Oracle._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -1972,7 +1973,7 @@ object TimeSeriesQueries {
   private def pivotQ(s: SparkSession, dir: String): DataFrame = {
     val types = Seq("click", "error", "purchase", "signup", "view")
     Tables.events(s, dir)
-      .select(TimeSeries.timeBucket(col("ts"), 86400L).as("day"),
+      .select(TimeBucket.timeBucket(col("ts"), 86400L).as("day"),
         col("event_type"), cents(col("value")).as("c"))
       .groupBy(col("day"))
       .pivot("event_type", types)

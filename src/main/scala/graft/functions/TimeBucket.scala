@@ -73,7 +73,8 @@ case class TimeBucket(time: Expression, widthUs: Expression, originUs: Expressio
 
 object TimeBucket {
   /** Column API: bucket `ts` into `widthSec` buckets aligned to
-    * `originEpochSec`.
+    * `originEpochSec` — TimescaleDB `time_bucket(width, ts, origin)`
+    * (reference scripts/database/init/create.sql:107,122,137).
     */
   def timeBucket(ts: Column, widthSec: Long, originEpochSec: Long = 0L): Column =
     GraftBridge.column(TimeBucket(GraftBridge.expression(ts),

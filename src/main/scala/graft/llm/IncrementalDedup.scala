@@ -62,16 +62,6 @@ import org.apache.spark.sql.functions._
   */
 object IncrementalDedup {
 
-  /** Daemon pool for concurrent index-fold kickoff inside [[admit]]
-    * — at most two short-lived tasks per admit, so a small cached
-    * pool is right-sized; daemon threads never pin JVM shutdown.
-    */
-  private lazy val foldEc: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newCachedThreadPool(r => {
-        val t = new Thread(r, "graft-index-fold"); t.setDaemon(true); t
-      }))
-
   /** The state-independent half of an admit: the batch's fingerprint
     * kernel (digest + minhash signature + in-batch keep-lowest-id),
     * kicked as a concurrent materialization at call time. The kernel
@@ -102,7 +92,7 @@ object IncrementalDedup {
         (0 until k).map(j => col("__sig").getItem(j).as(s"m$j"))): _*)
     import scala.concurrent.Future
     Prepared(docs,
-      Future(batchUnique.localCheckpoint(true))(foldEc), k)
+      Future(batchUnique.localCheckpoint(true))(graft.JobPool.ec), k)
   }
 
   /** A batch with its fingerprint kernel in flight — produced by
@@ -194,9 +184,9 @@ object IncrementalDedup {
         import scala.concurrent.Await
         import scala.concurrent.duration.Duration
         val diViewF = digests.map(di =>
-          scala.concurrent.Future(di.view(state))(foldEc))
+          scala.concurrent.Future(di.view(state))(graft.JobPool.ec))
         val biViewF = bands.map(bi =>
-          scala.concurrent.Future(bi.view(state, k, bandsOf))(foldEc))
+          scala.concurrent.Future(bi.view(state, k, bandsOf))(graft.JobPool.ec))
         val batchUniqueCk = Await.result(p.fpF, Duration.Inf)
         // exact: digest seen before. With a DigestIndex the stored
         // side is the bucketed digest table — zero Exchange, only the

@@ -62,7 +62,7 @@ object Retrieval {
     import scala.concurrent.duration.Duration
     val collected = lists.map { l =>
       Future(l.select(col("id"), col("rank").cast("double").as("r"))
-        .collect())(rrfEc)
+        .collect())(graft.JobPool.ec)
     }.map(Await.result(_, Duration.Inf))
     val idType = lists.head.schema("id").dataType
     // ids key the fold and break ties, so every list must carry one
@@ -123,13 +123,4 @@ object Retrieval {
     }
     spark.createDataFrame(data, schema)
   }
-
-  /** Daemon pool for the concurrent list collects in [[rrf]] — the
-    * [[IncrementalDedup]] fold-pool shape.
-    */
-  private lazy val rrfEc: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newCachedThreadPool(r => {
-        val t = new Thread(r, "graft-rrf-collect"); t.setDaemon(true); t
-      }))
 }

@@ -19,12 +19,11 @@ import scala.concurrent.duration._
   * marks this as the core custom engineering.
   *
   * Jobs take/return DataFrames. Rollups are partitioned by bucket
-  * date, and the incremental write path is O(feed):
-  * [[refreshFromFeed]] recomputes only the buckets the base table's
-  * new rows touched, from only the base partitions those buckets
-  * span, and [[writePartitionedTx]] upserts them, rewriting only the
-  * date partitions they fall in ([[writePartitioned]] is the plain
-  * dynamic-overwrite form for single-writer bulk jobs).
+  * date and kept one way, in O(feed): [[refreshFromFeed]] recomputes
+  * only the buckets the base table's new rows touched, from only the
+  * base partitions those buckets span, and [[writePartitionedTx]]
+  * upserts them, rewriting only the date partitions they fall in.
+  * [[fullPopulate]] builds the rollups from scratch.
   */
 object AggregateMaintenance {
 
@@ -36,33 +35,14 @@ object AggregateMaintenance {
       iv -> CandleOps.rollup(base, Schemas.intervalSeconds(iv))
     }.toMap
 
-  /** Incremental refresh of one rollup (reference policy: every width
-    * w, recompute window [now−3w, now−w] — create.sql:345-383).
-    * Buckets inside the window are replaced with freshly-computed
-    * ones; rows outside pass through untouched.
-    */
-  def incrementalRefresh(existing: DataFrame, base: DataFrame,
-                         widthSec: Long, asOf: Column): DataFrame = {
-    val lo = bucketOf(asOf - expr(s"interval ${3 * widthSec} seconds"), widthSec)
-    val fresh = CandleOps.rollup(
-      base.filter(col("time") >= lo), widthSec)
-    existing.filter(col("bucket") < lo).unionByName(fresh)
-  }
-
-  private def bucketOf(t: Column, widthSec: Long): Column =
-    graft.ops.TimeSeries.timeBucket(t.cast("timestamp"), widthSec,
-      CandleOps.originFor(widthSec))
-
   /** Change-feed-driven refresh: recompute exactly the rollup buckets
     * touched by the base table's appends since `sinceV`
     * ([[graft.storage.TxTable.readChangesSince]] — the feed reads only
     * the append-commit files of the version range, so discovering
     * WHAT to refresh is O(new data) even when the base table is
-    * 100 TB). This closes the loop the time-window policy
-    * approximates: instead of "recompute the trailing 3 widths and
-    * hope lag fits", the refresh is driven by exactly what landed,
-    * however stale — a backfill append from last year refreshes last
-    * year's buckets and nothing else.
+    * 100 TB). The refresh is driven by exactly what landed, however
+    * stale — a backfill append from last year refreshes last year's
+    * buckets and nothing else.
     *
     * Returns ONLY the recomputed buckets (every key of each touched
     * bucket), plus the version to hand back as the next `sinceV` (the
@@ -72,70 +52,41 @@ object AggregateMaintenance {
     * rewritten. `existing` only supplies the schema of the empty frame
     * an empty feed returns, which commits nothing.
     *
-    * The recompute scans only the snapshot files of the base dates the
+    * ONE driver action: the feed's distinct touched buckets are
+    * O(feed span / width) — a handful of timestamps, the same
+    * legitimate driver state as broadcast-join build sides. The
+    * recompute scans only the snapshot files of the base dates the
     * touched buckets span, so `base` must be partitioned by the date
     * of `time` in the session time zone (`p_date = to_date(time)`, the
-    * layout every writer of candle tables here uses).
+    * layout every writer of candle tables here uses). The exact bucket
+    * membership is an `InSet` over [[CandleOps.bucket]], the rollup's
+    * own bucket rule: a hash probe whose values the generated code
+    * references rather than inlines (`In`, which `isin` builds for up
+    * to 10 values, inlines them), so repeated refreshes of one rollup
+    * reuse its compiled scan instead of compiling a new one per
+    * touched set.
     */
   def refreshFromFeed(existing: DataFrame, base: TxTable,
                       sinceV: Long, widthSec: Long): (DataFrame, Long) = {
     val untilV = base.version
-    val snap = base.snapshot(untilV)
+    val bucket = CandleOps.bucket(col("time"), widthSec)
+    val touched = base.readChangesSince(sinceV, untilV)
+      .select(bucket).distinct()
+      .collect().map(_.getTimestamp(0)).toIndexedSeq
+    if (touched.isEmpty)
+      return (base.spark.createDataFrame(
+        base.spark.sparkContext.emptyRDD[Row], existing.schema), untilV)
     val zone = ZoneId.of(base.spark.conf.get("spark.sql.session.timeZone"))
     def day(t: Timestamp) = t.toInstant.atZone(zone).toLocalDate.toString
-    val fresh = recomputeTouched(base.readChangesSince(sinceV, untilV), widthSec) { (lo, end) =>
-      // ISO dates order as strings
-      val (first, last) = (day(lo), day(new Timestamp(end.getTime - 1)))
-      base.readSnapshot(snap.copy(
-        files = snap.files.filter(f => f.partition >= first && f.partition <= last)))
-    }
-    (fresh.fold(base.spark.createDataFrame(
-      base.spark.sparkContext.emptyRDD[Row], existing.schema))(_._2), untilV)
-  }
-
-  /** Refresh exactly the rollup buckets a micro-batch touched: the
-    * streaming-side analog of the CAgg refresh policy, for use inside
-    * foreachBatch after appending `batch` to the base table. Buckets
-    * not touched by the batch pass through unchanged, so the cost per
-    * trigger is O(batch), not O(table).
-    */
-  def refreshBuckets(existing: DataFrame, base: DataFrame, batch: DataFrame,
-                     widthSec: Long): DataFrame =
-    recomputeTouched(batch, widthSec) { (lo, end) =>
-      base.filter(col("time") >= lit(lo) && col("time") < lit(end))
-    }.fold(existing) {
-      case (touched, fresh) =>
-        existing.filter(!col("bucket").isInCollection(touched)).unionByName(fresh)
-    }
-
-  /** The touched-bucket recompute both refreshes share: (the distinct
-    * buckets `feed` touches, those buckets rolled up afresh from
-    * `baseOver(lo, end)`, which must hold every base row of
-    * [lo, end)), or None for an empty feed.
-    *
-    * ONE driver action: the feed's distinct touched buckets are
-    * O(feed span / width) — a handful of timestamps, the same
-    * legitimate driver state as broadcast-join build sides. With the
-    * set in hand the caller prunes `baseOver` to the span (files or
-    * rows), and the exact bucket membership is an `InSet`: a hash
-    * probe whose values the generated code references rather than
-    * inlines (`In`, which `isin` builds for up to 10 values, inlines
-    * them), so repeated refreshes of one rollup reuse its compiled
-    * scan instead of compiling a new one per touched set.
-    */
-  private def recomputeTouched(feed: DataFrame, widthSec: Long)(
-      baseOver: (Timestamp, Timestamp) => DataFrame): Option[(Seq[Timestamp], DataFrame)] = {
-    val touched = feed
-      .select(bucketOf(col("time"), widthSec).as("bucket")).distinct()
-      .collect().map(_.getTimestamp(0)).toIndexedSeq
-    if (touched.isEmpty) None
-    else {
-      val (lo, end) = (touched.min, new Timestamp(touched.max.getTime + widthSec * 1000))
-      val inTouched = GraftBridge.column(InSet(
-        GraftBridge.expression(bucketOf(col("time"), widthSec)),
-        touched.map(t => DateTimeUtils.fromJavaTimestamp(t): Any).toSet))
-      Some(touched -> CandleOps.rollup(baseOver(lo, end).filter(inTouched), widthSec))
-    }
+    // ISO dates order as strings
+    val (first, last) = (day(touched.min),
+      day(new Timestamp(touched.max.getTime + widthSec * 1000 - 1)))
+    val snap = base.snapshot(untilV)
+    val span = base.readSnapshot(snap.copy(
+      files = snap.files.filter(f => f.partition >= first && f.partition <= last)))
+    val inTouched = GraftBridge.column(InSet(GraftBridge.expression(bucket),
+      touched.map(t => DateTimeUtils.fromJavaTimestamp(t): Any).toSet))
+    (CandleOps.rollup(span.filter(inTouched), widthSec), untilV)
   }
 
   /** Daily job (reference scripts/database/cron/daily.sql): refresh
@@ -202,36 +153,16 @@ object AggregateMaintenance {
   case class CascadeResult(symbolExchange: DataFrame, base: DataFrame,
                            rollups: Map[String, DataFrame], errors: DataFrame)
 
-  /** The 100 TB write path: date-partitioned parquet with dynamic
-    * partition overwrite, so refresh jobs touch only changed dates.
-    * Sort within partitions by key+time for parquet min/max skipping
-    * of the composite-key point lookups (replaces the reference's
-    * B-tree indexes, create.sql:76-83).
-    */
-  def writePartitioned(df: DataFrame, path: String, timeCol: String = "bucket",
-                       invalidate: Seq[graft.api.QueryCache] = Nil): Unit = {
-    df.withColumn("p_date", to_date(col(timeCol)))
-      .repartition(col("p_date"))
-      .sortWithinPartitions(
-        (Seq("p_date") ++ CandleOps.keyCols :+ timeCol).map(col): _*)
-      .write
-      .partitionBy("p_date")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite")
-      .parquet(path)
-    // refreshed results must surface now, not after the 2 h TTL the
-    // reference rides out (caching.py region invalidation)
-    invalidate.foreach(_.invalidateAll())
-  }
-
-  /** [[writePartitioned]] through a transaction log: upserts `df` into
-    * exactly the date partitions it covers (rows of keys `df` lacks
-    * survive there), conflict-checked against concurrent appends (a
-    * streaming batch landing mid-refresh makes this retry and fold it
-    * in — TxLog.scala). An empty `df` on a committed table publishes
-    * nothing. This is the refresh write path to pair with
-    * [[refreshFromFeed]] and [[graft.streaming.CandleStream.runPipelineTx]];
-    * plain [[writePartitioned]] stays for single-writer bulk jobs.
+  /** The rollup write path, through a transaction log: upserts `df`
+    * into exactly the date partitions it covers (rows of keys `df`
+    * lacks survive there), conflict-checked against concurrent appends
+    * (a streaming batch landing mid-refresh makes this retry and fold
+    * it in — TxLog.scala). Each upserted partition is sorted by
+    * key+time for parquet min/max skipping of the composite-key point
+    * lookups (replaces the reference's B-tree indexes,
+    * create.sql:76-83). An empty `df` on a committed table publishes
+    * nothing. Pair it with [[refreshFromFeed]] and
+    * [[graft.streaming.CandleStream.runPipelineTx]].
     */
   def writePartitionedTx(df: DataFrame, table: TxTable,
                          timeCol: String = "bucket",
@@ -291,7 +222,8 @@ object AggregateMaintenance {
         .sortWithinPartitions(
           (Seq(col("p_date"), col(TxTable.TagCol)) ++ keys.map(col)): _*)
     }
-    // same contract as writePartitioned: refreshed results surface now
+    // refreshed results must surface now, not after the 2 h TTL the
+    // reference rides out (caching.py region invalidation)
     invalidate.foreach(_.invalidateAll())
   }
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.Schemas
+import graft.functions.TimeBucket
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -12,12 +12,16 @@ import org.apache.spark.sql.functions._
 object CandleOps {
   val keyCols: Seq[String] = Seq("exchange", "base_id", "quote_id")
 
-  /** TimescaleDB bucket origin: multi-day buckets align to 2000-01-03
+  /** The rollup bucket of `t` at `widthSec`: `time_bucket` with
+    * TimescaleDB's origin — multi-day buckets align to 2000-01-03
     * (Monday); sub-day widths divide the day so epoch alignment is
-    * identical (SURVEY F1 caveat).
+    * identical (SURVEY F1 caveat). The one bucket rule: [[rollup]] and
+    * the refresh's touched-bucket probe
+    * ([[graft.maintenance.AggregateMaintenance.refreshFromFeed]]) both
+    * call it, so they cannot disagree on a bucket.
     */
-  def originFor(widthSec: Long): Long =
-    if (widthSec >= 86400L * 7) 946857600L else 0L
+  def bucket(t: Column, widthSec: Long): Column =
+    TimeBucket.timeBucket(t, widthSec, if (widthSec >= 86400L * 7) 946857600L else 0L)
 
   /** Roll 1-minute (or finer-rollup) candles up to `widthSec` buckets.
     * first/last are time-ordered via min_by/max_by — exactly
@@ -30,7 +34,7 @@ object CandleOps {
     val t = col(timeCol)
     df.groupBy(
         col("exchange"), col("base_id"), col("quote_id"),
-        TimeSeries.timeBucket(t, widthSec, originFor(widthSec)).as("bucket"))
+        bucket(t, widthSec).as("bucket"))
       .agg(
         min_by(col("open"), t).as("open"),
         max(col("high")).as("high"),

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.functions.TimeBucket
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -21,14 +22,6 @@ import org.apache.spark.sql.functions._
   * extra.
   */
 object TimeSeries {
-  /** TimescaleDB `time_bucket(width, ts, origin)`
-    * (reference scripts/database/init/create.sql:107,122,137), backed
-    * by the native codegen expression [[graft.functions.TimeBucket]]
-    * (floor division — correct for pre-origin timestamps too).
-    */
-  def timeBucket(ts: Column, widthSec: Long, originEpochSec: Long = 0L): Column =
-    graft.functions.TimeBucket.timeBucket(ts, widthSec, originEpochSec)
-
   /** OHLCV candle rollup — the reference workload's core operator
     * (SURVEY A1; reference schemas/aggregations.sql:11-22, the 8
     * continuous aggregates create.sql:105-223).
@@ -46,7 +39,7 @@ object TimeSeries {
       widthSec: Long,
       originEpochSec: Long = 0L,
       volume: Option[Column] = None): DataFrame =
-    df.groupBy((keys :+ timeBucket(timeCol, widthSec, originEpochSec).as("bucket")): _*)
+    df.groupBy((keys :+ TimeBucket.timeBucket(timeCol, widthSec, originEpochSec).as("bucket")): _*)
       .agg(
         min_by(value, timeCol).as("open"),
         max(value).as("high"),

@@ -652,7 +652,7 @@ class TxTable(val spark: SparkSession, val root: String,
     * [[TxConflictException]] if any commit after `readVersion`
     * changed a file inside `parts`.
     */
-  def commitRewrite(readVersion: Long, parts: Set[String],
+  private[storage] def commitRewrite(readVersion: Long, parts: Set[String],
                     adds: Seq[TxFile], schema: StructType,
                     freshAdds: Seq[TxFile] = Seq.empty): Long =
     retryCas(if (freshAdds.isEmpty) "rewrite" else "upsert") { snap =>
@@ -667,7 +667,7 @@ class TxTable(val spark: SparkSession, val root: String,
     * computed against that snapshot, so a same-partition commit
     * invalidates it. The schema evolves additively, as on append.
     */
-  def commitUpsert(readVersion: Long, parts: Set[String],
+  private def commitUpsert(readVersion: Long, parts: Set[String],
                    freshAdds: Seq[TxFile], schema: StructType): Long =
     retryCas("upsert") { snap =>
       conflictCheck(readVersion, snap.version, parts, snap.files)
@@ -988,8 +988,8 @@ class TxTable(val spark: SparkSession, val root: String,
       .withColumn("__i", col("_metadata.row_index"))
       .join(broadcast(bkeys), keys, "left_semi")
       .select(keys.map(col) :+ col("__f") :+ col("__i"): _*)
-      .localCheckpoint(true))(TxTable.dmlEc)
-    val batchCkF = Future(batch.localCheckpoint(true))(TxTable.dmlEc)
+      .localCheckpoint(true))(graft.JobPool.ec)
+    val batchCkF = Future(batch.localCheckpoint(true))(graft.JobPool.ec)
     val marked = Await.result(markedF, Duration.Inf)
     val batchCk = Await.result(batchCkF, Duration.Inf)
     val nMarks = marked.count()
@@ -1012,8 +1012,8 @@ class TxTable(val spark: SparkSession, val root: String,
     val tagged = batchCk.join(broadcast(mTag), keys, "left")
       .withColumn(TagCol, when(col("__m").isNotNull, lit("u")).otherwise(lit("n")))
       .drop("__m")
-    val stagedF = Future(stageSplit(tagged, TagCol))(TxTable.dmlEc)
-    val touchedF = Future(touchedPartitions(batchCk))(TxTable.dmlEc)
+    val stagedF = Future(stageSplit(tagged, TagCol))(graft.JobPool.ec)
+    val touchedF = Future(touchedPartitions(batchCk))(graft.JobPool.ec)
     val dvAdds = marksAt(snap, marked.select(col("__f").as("f"), col("__i").as("i")))
     val staged = Await.result(stagedF, Duration.Inf)
     val stagedUpd = staged.getOrElse("u", Seq.empty)
@@ -1282,17 +1282,6 @@ object TxTable {
     */
   val DefaultDvMarkBudget: Long = 5000000L
 
-  /** Daemon pool for overlapping a DML commit's independent Spark
-    * jobs (mark scan, batch materialization, staging writes) — short-
-    * lived tasks, so a cached pool is right-sized; daemon threads
-    * never pin JVM shutdown. Concurrent job submission from separate
-    * threads is the supported scheduler pattern.
-    */
-  private[storage] lazy val dmlEc: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newCachedThreadPool(r => {
-        val t = new Thread(r, "graft-tx-dml"); t.setDaemon(true); t
-      }))
   private val DeltaName = """v(\d+)\.delta""".r
   private val CheckpointName = """v(\d+)\.checkpoint""".r
   private[storage] val StatsName = """v(\d+)\.stats""".r

@@ -1,7 +1,7 @@
 package graft.maintenance
 
 import graft.SparkSpec
-import graft.core.OhlcvFixture
+import graft.core.{OhlcvFixture, Schemas}
 import graft.ops.CandleOps
 import graft.storage.TxTable
 import org.apache.spark.sql.functions._
@@ -20,24 +20,31 @@ class FeedRefreshSpec extends SparkSpec {
     new TxTable(spark,
       java.nio.file.Files.createTempDirectory("feedrefresh").toString)
 
-  private def fullRollup(t: TxTable) = CandleOps.rollup(t.read(), 3600L)
+  private def fullRollup(t: TxTable, widthSec: Long = 3600L) =
+    CandleOps.rollup(t.read(), widthSec)
 
-  /** A 1 h rollup table holding the full rollup of `base` now. */
-  private def rollupTable(base: TxTable): TxTable = {
+  /** A `widthSec` rollup table holding the full rollup of `base` now. */
+  private def rollupTable(base: TxTable, widthSec: Long = 3600L): TxTable = {
     val r = freshTable()
-    AggregateMaintenance.writePartitionedTx(fullRollup(base), r)
+    AggregateMaintenance.writePartitionedTx(fullRollup(base, widthSec), r)
     r
   }
 
   /** One maintenance step: refresh `roll` from `base`'s feed since
     * `cursor` and write it back; returns the next cursor.
     */
-  private def refresh(roll: TxTable, base: TxTable, cursor: Long): Long = {
+  private def refresh(roll: TxTable, base: TxTable, cursor: Long,
+                      widthSec: Long = 3600L): Long = {
     val (fresh, next) =
-      AggregateMaintenance.refreshFromFeed(roll.read().drop("p_date"), base, cursor, 3600L)
+      AggregateMaintenance.refreshFromFeed(roll.read().drop("p_date"), base, cursor, widthSec)
     AggregateMaintenance.writePartitionedTx(fresh, roll)
     next
   }
+
+  /** Every maintained rollup width, 5 m through 7 D (the only width
+    * whose buckets align to a non-zero origin).
+    */
+  private val widths = Schemas.rollupIntervals.map(Schemas.intervalSeconds)
 
   // volume is an FP sum whose partition order differs between the
   // incremental and full plans — compare at 1e-6, like the rollup
@@ -58,20 +65,22 @@ class FeedRefreshSpec extends SparkSpec {
     val Array(b1, b2, b3) = Array(0, 1, 2).map(i => fx.filter(pmod(hash(col("time")), lit(3)) === i))
 
     t.append(b1)
-    val roll = rollupTable(t)
+    val rolls = widths.map(w => w -> rollupTable(t, w))
     val cursor = t.version
 
     t.append(b2) // two separate commits -> two feed versions
     t.append(b3)
-    val cursor2 = refresh(roll, t, cursor)
-    assert(rows(roll) === asSet(fullRollup(t)))
-    assert(cursor2 === t.version)
+    rolls.foreach { case (w, roll) =>
+      val cursor2 = refresh(roll, t, cursor, w)
+      assert(rows(roll) === asSet(fullRollup(t, w)), s"width ${w}s")
+      assert(cursor2 === t.version)
 
-    // nothing new: the empty refresh publishes no rollup version and
-    // the cursor stays
-    val rollV = roll.version
-    val cursor3 = refresh(roll, t, cursor2)
-    assert(roll.version === rollV && cursor3 === cursor2)
+      // nothing new: the empty refresh publishes no rollup version and
+      // the cursor stays
+      val rollV = roll.version
+      val cursor3 = refresh(roll, t, cursor2, w)
+      assert(roll.version === rollV && cursor3 === cursor2, s"width ${w}s")
+    }
   }
 
   /** (result of `body`, Spark jobs started while it ran). A marker
@@ -120,7 +129,7 @@ class FeedRefreshSpec extends SparkSpec {
     val fx = OhlcvFixture.ohlcvs(spark, nPairs = 1, rows = 100)
       .withColumn("p_date", to_date(col("time")))
     t.append(fx)
-    val roll = rollupTable(t)
+    val rolls = widths.map(w => w -> rollupTable(t, w))
     val cursor = t.version
 
     // backfill a year earlier than everything else
@@ -128,9 +137,11 @@ class FeedRefreshSpec extends SparkSpec {
       .withColumn("time", col("time") - expr("interval 365 days"))
       .withColumn("p_date", to_date(col("time")))
     t.append(old)
-    refresh(roll, t, cursor)
-    assert(rows(roll) === asSet(fullRollup(t)),
-      "backfilled buckets a year back must be refreshed")
+    rolls.foreach { case (w, roll) =>
+      refresh(roll, t, cursor, w)
+      assert(rows(roll) === asSet(fullRollup(t, w)),
+        s"width ${w}s: backfilled buckets a year back must be refreshed")
+    }
   }
 
   test("a refresh rewrites only the date partitions the feed touched, in at most 6 jobs") {

@@ -2,49 +2,30 @@ package graft.maintenance
 
 import graft.SparkSpec
 import graft.core.OhlcvFixture
+import graft.storage.TxTable
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
-/** Proves the 100 TB layout mechanics on disk: date-partitioned
-  * writes, partition pruning for time predicates, and dynamic
-  * partition overwrite for incremental refresh.
+/** Proves the 100 TB layout mechanics on disk: the rollup write path
+  * lays a table out in date partitions, and time predicates prune
+  * them. (That a refresh rewrites only the dates it touched is
+  * `FeedRefreshSpec`'s "untouched date partitions keep their files".)
   */
 class PartitionedLayoutSpec extends SparkSpec {
 
-  test("writePartitioned produces date partitions and time filters prune them") {
-    val dir = Files.createTempDirectory("graft_part").toFile.getAbsolutePath
+  test("writePartitionedTx produces date partitions and time filters prune them") {
+    val t = new TxTable(spark, Files.createTempDirectory("graft_part").toString)
     val fx = OhlcvFixture.ohlcvs(spark, nPairs = 2, rows = 3000) // ~2 days
-    AggregateMaintenance.writePartitioned(fx, dir, timeCol = "time")
+    AggregateMaintenance.writePartitionedTx(fx, t, timeCol = "time")
 
-    val dates = new java.io.File(dir).listFiles().map(_.getName).filter(_.startsWith("p_date="))
+    val dates = t.snapshot(t.version).files.map(_.partition).distinct
     assert(dates.length >= 3, dates.mkString(","))
 
-    val read = spark.read.parquet(dir)
-      .filter(col("p_date") === "2021-08-18")
+    val read = t.read().filter(col("p_date") === "2021-08-18")
     val plan = read.queryExecution.executedPlan.toString()
     assert(plan.contains("PartitionFilters: [isnotnull(p_date"), plan)
     // only one partition's rows survive
     val expected = fx.filter(to_date(col("time")) === "2021-08-18").count()
     assert(read.count() == expected)
-  }
-
-  test("dynamic partition overwrite rewrites only touched dates") {
-    val dir = Files.createTempDirectory("graft_dpo").toFile.getAbsolutePath
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    val fx = OhlcvFixture.ohlcvs(spark, nPairs = 2, rows = 3000).cache()
-    AggregateMaintenance.writePartitioned(fx, dir, timeCol = "time")
-    val before = spark.read.parquet(dir).count()
-
-    // "refresh" only 2021-08-19: rewrite with volume zeroed
-    val patch = fx.filter(to_date(col("time")) === "2021-08-19")
-      .withColumn("volume", lit(0.0))
-    AggregateMaintenance.writePartitioned(patch, dir, timeCol = "time")
-
-    val after = spark.read.parquet(dir)
-    assert(after.count() == before) // other dates untouched
-    assert(after.filter(col("p_date") === "2021-08-19")
-      .agg(sum("volume")).first().getDouble(0) == 0.0)
-    assert(after.filter(col("p_date") === "2021-08-18")
-      .agg(sum("volume")).first().getDouble(0) > 0.0)
   }
 }

@@ -3,7 +3,6 @@ package graft.ops
 import graft.SparkSpec
 import graft.api.OhlcvReader
 import graft.core.OhlcvFixture
-import graft.maintenance.AggregateMaintenance
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -133,18 +132,6 @@ class OhlcvSpec extends SparkSpec {
     assert(stale.filter(col("is_trading")).count() == 0)
   }
 
-  test("incrementalRefresh window-recompute equals full recompute") {
-    val width = 3600L
-    val full = CandleOps.rollup(fx, width)
-    // stale copy: zero out the volume in the last 2 buckets, refresh must fix it
-    val asOf = lit("2021-08-19 01:00:00")
-    val stale = full.withColumn("volume",
-      when(col("bucket") >= lit("2021-08-18 22:00:00").cast("timestamp"), lit(-1.0))
-        .otherwise(col("volume")))
-    val refreshed = AggregateMaintenance.incrementalRefresh(stale, fx, width, asOf)
-    assert(key(refreshed) == key(full))
-  }
-
   test("upsert + insertIgnore reproduce ON CONFLICT semantics") {
     val t0 = Seq(
       ("2021-08-18 00:00:00", "bitfinex", "BTC", "USD", 1.0, 2.0, 0.5, 1.5, 10.0)
@@ -210,16 +197,5 @@ class OhlcvSpec extends SparkSpec {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(salted == direct)
     assert(salted("HOT") == 30000L)
-  }
-
-  test("refreshBuckets recomputes only touched buckets and matches full rollup") {
-    val width = 3600L
-    val cutoff = lit("2021-08-18 20:00:00").cast("timestamp")
-    val oldBase = fx.filter(col("time") < cutoff)
-    val batch = fx.filter(col("time") >= cutoff)
-    val staleRollup = CandleOps.rollup(oldBase, width)
-    val refreshed = graft.maintenance.AggregateMaintenance
-      .refreshBuckets(staleRollup, fx, batch, width)
-    assert(key(refreshed) == key(CandleOps.rollup(fx, width)))
   }
 }
