@@ -195,25 +195,13 @@ final class OhlcvHttpServer(
 
   // ------------------------------------------------------------ REST
 
-  private def exchangeHandler: com.sun.net.httpserver.HttpHandler = ex => {
-    def respond(code: Int, body: String): Unit = {
-      val b = body.getBytes(UTF_8)
-      ex.getResponseHeaders.set("Content-Type", "application/json")
-      ex.sendResponseHeaders(code, b.length)
-      ex.getResponseBody.write(b)
-      ex.close()
-    }
-    try {
-      val q = Option(ex.getRequestURI.getRawQuery).getOrElse("")
-      val params = q.split("&").filter(_.contains("=")).map { kv =>
-        val i = kv.indexOf('=')
-        java.net.URLDecoder.decode(kv.take(i), "UTF-8") ->
-          java.net.URLDecoder.decode(kv.drop(i + 1), "UTF-8")
-      }.toMap
+  private def exchangeHandler: com.sun.net.httpserver.HttpHandler = ex =>
+    respondJson(ex) {
+      val params = queryParams(ex)
       val missing = Seq("exchange", "base_id", "quote_id", "interval")
         .filterNot(params.contains)
       if (missing.nonEmpty)
-        respond(422, s"""{"detail":"missing required parameters: ${missing.mkString(", ")}"}""")
+        (422, s"""{"detail":"missing required parameters: ${missing.mkString(", ")}"}""")
       else {
         val p = OhlcvReader.Params(
           exchange = params("exchange"), baseId = params("base_id"),
@@ -223,51 +211,53 @@ final class OhlcvHttpServer(
           limit = params.get("limit").map(_.toInt).getOrElse(500),
           emptyTs = params.get("empty_ts").exists(_.toBoolean),
           mls = params.get("results_mls").forall(_.toBoolean))
-        respond(200, fetch(p).map(_.json).mkString("[", ",", "]"))
+        (200, fetch(p).map(_.json).mkString("[", ",", "]"))
       }
-    } catch {
-      case e: IllegalArgumentException =>
-        respond(400, s"""{"detail":${quote(e.getMessage)}}""")
-      case e: Exception =>
-        respond(500, s"""{"detail":${quote(String.valueOf(e.getMessage))}}""")
     }
-  }
 
   /** Registered-route dispatch: `/api/rest/<suffix>` → rows rendered
     * as a JSON object list in column order (the FastAPI model-list
     * shape); unknown suffixes 404 with FastAPI's detail.
     */
-  private def routesHandler: com.sun.net.httpserver.HttpHandler = ex => {
-    def respond(code: Int, body: String): Unit = {
-      val b = body.getBytes(UTF_8)
-      ex.getResponseHeaders.set("Content-Type", "application/json")
-      ex.sendResponseHeaders(code, b.length)
-      ex.getResponseBody.write(b)
-      ex.close()
-    }
-    val suffix = ex.getRequestURI.getPath.stripPrefix("/api/rest/")
-    routes.get(suffix) match {
-      case None => respond(404, """{"detail":"Not Found"}""")
-      case Some(route) =>
-        try {
-          val q = Option(ex.getRequestURI.getRawQuery).getOrElse("")
-          val params = q.split("&").filter(_.contains("=")).map { kv =>
-            val i = kv.indexOf('=')
-            java.net.URLDecoder.decode(kv.take(i), "UTF-8") ->
-              java.net.URLDecoder.decode(kv.drop(i + 1), "UTF-8")
-          }.toMap
-          val body = route(params).map(row =>
+  private def routesHandler: com.sun.net.httpserver.HttpHandler = ex =>
+    respondJson(ex) {
+      routes.get(ex.getRequestURI.getPath.stripPrefix("/api/rest/")) match {
+        case None => (404, """{"detail":"Not Found"}""")
+        case Some(route) =>
+          (200, route(queryParams(ex)).map(row =>
             row.map { case (k, v) => s"${quote(k)}:${jsonValue(v)}" }
-              .mkString("{", ",", "}")).mkString("[", ",", "]")
-          respond(200, body)
-        } catch {
-          case e: IllegalArgumentException =>
-            respond(400, s"""{"detail":${quote(String.valueOf(e.getMessage))}}""")
-          case e: Exception =>
-            respond(500, s"""{"detail":${quote(String.valueOf(e.getMessage))}}""")
-        }
+              .mkString("{", ",", "}")).mkString("[", ",", "]"))
+      }
     }
+
+  /** Send `body`'s (status, JSON) as the response; a failure becomes
+    * FastAPI's `{"detail": message}` — 400 for a domain error
+    * (IllegalArgumentException), 500 for anything else.
+    */
+  private def respondJson(ex: com.sun.net.httpserver.HttpExchange)
+                         (body: => (Int, String)): Unit = {
+    def detail(e: Exception) = s"""{"detail":${quote(String.valueOf(e.getMessage))}}"""
+    val (code, json) =
+      try body
+      catch {
+        case e: IllegalArgumentException => (400, detail(e))
+        case e: Exception => (500, detail(e))
+      }
+    val b = json.getBytes(UTF_8)
+    ex.getResponseHeaders.set("Content-Type", "application/json")
+    ex.sendResponseHeaders(code, b.length)
+    ex.getResponseBody.write(b)
+    ex.close()
   }
+
+  /** The URL-decoded query parameters of a request. */
+  private def queryParams(ex: com.sun.net.httpserver.HttpExchange): Map[String, String] =
+    Option(ex.getRequestURI.getRawQuery).getOrElse("").split("&")
+      .filter(_.contains("=")).map { kv =>
+        val i = kv.indexOf('=')
+        java.net.URLDecoder.decode(kv.take(i), "UTF-8") ->
+          java.net.URLDecoder.decode(kv.drop(i + 1), "UTF-8")
+      }.toMap
 
   private def jsonValue(v: Any): String = v match {
     case null => "null"

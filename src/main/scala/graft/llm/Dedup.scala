@@ -31,18 +31,6 @@ object Dedup {
       .select(col("id"), col("canon_id"))
   }
 
-  /** MinHash signature per id over exploded distinct shingles:
-    * minhash_s(doc) = min over shingles of md5("s|" + shingle),
-    * computed as k parallel min-aggregates in ONE pass (no seed
-    * crossJoin — a k-way row blowup through a shuffle). Lexicographic
-    * min over md5 hex = a deterministic uniform hash family, portable
-    * across engines. Output: (id, m0..m{k-1}).
-    */
-  def minHashSignature(exploded: DataFrame, id: Column, shingle: Column, k: Int): DataFrame = {
-    val hashed = exploded.select(id.as("id") +: minHashDigests(shingle): _*)
-    hashed.groupBy(col("id")).agg(minHashAggs(k).head, minHashAggs(k).tail: _*)
-  }
-
   /** The shared minhash hashing scheme: ONE md5 per shingle per FOUR
     * seeds, sliced into disjoint 8-hex (32-bit) values — md5's 128
     * bits carry four independent uniform orderings, so hashing once
@@ -252,23 +240,6 @@ object Dedup {
         (col("shared").cast("double") / col("n_a").cast("double")).as("containment"))
   }
 
-  /** Exact Jaccard over candidate pairs given the exploded distinct
-    * shingle table (id, s). Joins run per-bucket, not all-pairs.
-    */
-  def jaccard(candidates: DataFrame, exploded: DataFrame): DataFrame = {
-    val sizes = exploded.groupBy(col("id")).agg(count(lit(1)).as("n"))
-    val inter = candidates
-      .join(exploded.select(col("id").as("id_a"), col("s")), "id_a")
-      .join(exploded.select(col("id").as("id_b"), col("s")), Seq("id_b", "s"))
-      .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("ninter"))
-    inter
-      .join(sizes.select(col("id").as("id_a"), col("n").as("na")), "id_a")
-      .join(sizes.select(col("id").as("id_b"), col("n").as("nb")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        (col("ninter") * lit(1.0d) /
-          (col("na") + col("nb") - col("ninter"))).as("jaccard"))
-  }
-
   /** THE sigd/docsig construction shared by [[minHashNearDups]] and
     * [[minHashEstimates]] (factored round 17 so a kernel change cannot
     * drift the twins apart): docs → (id, gs distinct-shingle set,
@@ -317,22 +288,12 @@ object Dedup {
   /** Full MinHash+LSH near-dup pipeline: docs(id, shingles array) →
     * pairs with exact Jaccard ≥ threshold.
     *
-    * Fused shape: ONE groupBy(id) computes the distinct shingle set
-    * AND the k-hash signature; bands, the candidate join, and both
-    * hydration sides reuse that single exchange. The factored
-    * alternative ([[minHashSignature]] + [[jaccard]] over the exploded
-    * shingles) re-evaluates the shingling — typically the dominant
-    * cost — once per consumer (4x: signature, both intersection
-    * sides, sizes). Jaccard here is array_intersect over the carried
-    * sets: same integers as the join-count form, since sets are
-    * per-doc distinct.
-    *
-    * A/B vs [[minHashNearDupsFactored]] (MinHashProbe, sf0.1, 5-round
-    * medians): fused 1.97s / factored 1.92s from a cold scan, 1.38s /
-    * 1.52s with the scan fanned out — a wash within box noise, fused
-    * marginally ahead when shingling is parallel. (An earlier 5.4s
-    * fused reading that suggested a regression was shared-box
-    * contention, not the array payloads.)
+    * Fused shape: ONE pass computes the distinct shingle set AND the
+    * k-hash signature; bands, the candidate join, and both hydration
+    * sides reuse it, so the shingling — typically the dominant cost —
+    * is evaluated once, not once per consumer. Jaccard here is
+    * array_intersect over the carried sets: same integers as a
+    * join-count form, since sets are per-doc distinct.
     */
   def minHashNearDups(docs: DataFrame, id: Column, shinglesCol: Column,
                       k: Int, bandsOf: Int, threshold: Double): DataFrame = {
@@ -378,24 +339,6 @@ object Dedup {
         (col("n_match").cast("double") / k).as("est"),
         (col("ninter") * lit(1.0d) /
           (size(col("ga")) + size(col("gb")) - col("ninter"))).as("jaccard"))
-  }
-
-  /** Factored alternative to [[minHashNearDups]]: signature, bands,
-    * and Jaccard verification all consume the exploded (id, s) rows
-    * directly — the candidate verifier re-joins the shingle table and
-    * counts intersections instead of carrying whole shingle arrays
-    * through the candidate joins. Same contract and (per-doc-distinct
-    * sets) identical numbers; kept for A/B measurement — array
-    * payloads through joins vs a second pass over the shingles.
-    */
-  def minHashNearDupsFactored(docs: DataFrame, id: Column, shinglesCol: Column,
-                              k: Int, bandsOf: Int, threshold: Double): DataFrame = {
-    val exploded = docs
-      .select(id.as("id"), explode_outer(array_distinct(shinglesCol)).as("s"))
-      .filter(col("s").isNotNull) // outer: see editNearDups' pushed-filter note
-    val sig = minHashSignature(exploded, col("id"), col("s"), k)
-    val cand = lshCandidates(lshBands(sig, k, bandsOf))
-    jaccard(cand, exploded).filter(col("jaccard") >= threshold)
   }
 
   /** Quality-aware survivor selection over near-dup clusters: keep
@@ -731,8 +674,7 @@ object Dedup {
     * not a groupBy on label. For graphs with genuinely long chains,
     * use [[componentsStar]] (the Kiveris et al. SoCC'14
     * large-star/small-star decomposition — same per-round shape,
-    * O(log²) rounds); for an unknown diameter with a star-shaped
-    * expectation, [[componentsUntilStable]] adds the fixpoint check.
+    * O(log²) rounds).
     *
     * Checkpoint durability (`reliable` flag): the default
     * `localCheckpoint` stores blocks on executors only — fast, but an
@@ -764,50 +706,6 @@ object Dedup {
           least(col("label"), coalesce(col("nl"), col("label"))).as("label")))
     }
     labels
-  }
-
-  /** Min-label propagation until the labels stop changing — the
-    * fixpoint form of [[components]] for callers who don't know the
-    * graph diameter up front. Runs at most `maxIters` rounds, exiting
-    * as soon as a round changes no label (so a star-shaped near-dup
-    * graph pays 1 productive round + 1 confirming round, while a
-    * pathological chain is cut off at the cap rather than looping).
-    * Returns (labels, roundsRun); `roundsRun == maxIters` with a
-    * still-unstable graph means under-convergence — switch to
-    * [[componentsStar]], whose round count is O(log² n) regardless of
-    * diameter, instead of raising the cap.
-    *
-    * Cost of the fixpoint check: the changed-flag count is computed on
-    * the round's already-materialized labels (one cheap scan of
-    * checkpointed blocks per round), not a second pass over the join.
-    */
-  def componentsUntilStable(pairs: DataFrame, idA: Column, idB: Column,
-                            maxIters: Int = 20,
-                            reliable: Boolean = false): (DataFrame, Int) = {
-    require(maxIters >= 1, s"maxIters=$maxIters must be >= 1")
-    def materialize(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(true) else df.localCheckpoint(true)
-    val e0 = pairs.select(idA.as("src"), idB.as("dst"))
-    val edges = materialize(e0
-      .unionByName(e0.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct())
-    var labels = edges.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("label"))
-    var rounds = 0
-    var changed = 1L
-    while (changed > 0 && rounds < maxIters) {
-      rounds += 1
-      val viaNbr = edges
-        .join(labels.select(col("id").as("dst"), col("label")), "dst")
-        .groupBy(col("src").as("id")).agg(min(col("label")).as("nl"))
-      val next = materialize(labels.join(viaNbr, Seq("id"), "left")
-        .select(col("id"),
-          least(col("label"), coalesce(col("nl"), col("label"))).as("label"),
-          coalesce(col("nl") < col("label"), lit(false)).as("__changed")))
-      changed = next.filter(col("__changed")).count()
-      labels = next.drop("__changed")
-    }
-    (labels, rounds)
   }
 
   /** Partition-local union-find contraction — the narrow pre-pass in

@@ -155,9 +155,6 @@ object TextOps {
   def punctCount(text: Column): Column =
     length(text) - length(regexp_replace(text, "[.,;:!?]", ""))
 
-  def upperCount(text: Column): Column =
-    length(text) - length(regexp_replace(text, "[A-Z]", ""))
-
   /** PII scrubbing for training corpora: redact emails, IPv4
     * addresses, and phone numbers to typed placeholders. The patterns
     * stay inside the Java-regex ∩ RE2 common subset (no lookaround, no

@@ -33,6 +33,13 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *    most `checkpointInterval` small deltas on top of one
   *    checkpoint, and a long-lived table's per-commit log I/O stays
   *    O(batch) forever instead of growing with history.
+  *  - `#`-prefixed meta lines ride the same file: `#dv path idxs`
+  *    deletion-vector marks, `#touch partition` for a commit that
+  *    changed a partition's content without a file op, and `#kind k`
+  *    naming the commit path (absent: `append`). One function,
+  *    [[readLog]], parses log files into a [[TxTable.Delta]]; snapshot
+  *    replay, the change feed, the update marker and the conflict
+  *    check all fold that parsed form.
   *  - Commit = create-exclusive of the next delta file (atomic
   *    hard-link on a local filesystem, `create(overwrite=false)` on
   *    HDFS; on S3 you would swap in a conditional PUT — same slot,
@@ -142,45 +149,68 @@ class TxTable(val spark: SparkSession, val root: String,
     require(v >= 0, s"no committed version (asked for $v)")
     val (_, ckpts) = logVersions()
     val ckptV = ckpts.filter(_ <= v).foldLeft(-1L)(math.max)
+    val logs =
+      (if (ckptV < 0) Iterator.empty
+       else Iterator(readLog(checkpointPath(ckptV), checkpoint = true))) ++
+        ((ckptV + 1) to v).iterator.map(readDelta)
     var schema: StructType = null
     val files = scala.collection.mutable.LinkedHashSet.empty[TxFile]
     val dv = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Long]]
-    def mergeDv(l: String): Unit = {
-      val Array(_, path, idxs) = l.split("\t", 3)
-      val add = idxs.split(",").map(_.toLong)
-      dv.updateWith(path) {
-        case Some(cur) => Some((cur ++ add).distinct.sorted.toSeq)
-        case None => Some(add.toSeq.sorted)
+    logs.foreach { d =>
+      schema = d.schema
+      // `+` reshaped-content add, `n` net-new-content add (the change
+      // feed cares about the distinction; a snapshot does not)
+      d.ops.foreach {
+        case ('-', f) => files -= f; dv -= f.path
+        case (_, f) => files += f
       }
-      ()
-    }
-    if (ckptV >= 0) {
-      val lines = readLogFile(checkpointPath(ckptV))
-      schema = DataType.fromJson(lines.head).asInstanceOf[StructType]
-      lines.tail.filter(_.nonEmpty).foreach { l =>
-        if (l.startsWith("#dv\t")) mergeDv(l)
-        else if (!l.startsWith("#")) {
-          val Array(part, path) = l.split("\t", 2)
-          files += TxFile(path, part)
-        }
-      }
-    }
-    ((ckptV + 1) to v).foreach { i =>
-      val lines = readLogFile(deltaPath(i))
-      schema = DataType.fromJson(lines.head).asInstanceOf[StructType]
-      lines.tail.filter(_.nonEmpty).foreach { l =>
-        if (l.startsWith("#dv\t")) mergeDv(l)
-        else if (!l.startsWith("#")) {
-          val Array(op, part, path) = l.split("\t", 3)
-          // `+` reshaped-content add, `n` net-new-content add (the
-          // change feed cares about the distinction; a snapshot does not)
-          if (op == "+" || op == "n") files += TxFile(path, part)
-          else { files -= TxFile(path, part); dv -= path }
-        }
+      d.dv.foreach { case (path, add) =>
+        dv(path) = dv.get(path).fold(add.sorted)(cur => (cur ++ add).distinct.sorted)
       }
     }
     val live = files.map(_.path).toSet
     Snapshot(v, schema, files.toSeq, dv.filter { case (p, _) => live.contains(p) }.toMap)
+  }
+
+  /** The one parser of log files. A delta's op lines are `op partition
+    * path`; a checkpoint's live-file lines are `partition path` and
+    * parse as `+` ops. Unknown `#` lines are skipped.
+    */
+  private def readLog(p: org.apache.hadoop.fs.Path, checkpoint: Boolean): Delta = {
+    val lines = readLogFile(p)
+    val ops = Seq.newBuilder[(Char, TxFile)]
+    val dv = Seq.newBuilder[(String, Seq[Long])]
+    val touched = Seq.newBuilder[String]
+    var kind = "append"
+    lines.tail.filter(_.nonEmpty).foreach { l =>
+      if (l.startsWith("#")) l.split("\t", 3) match {
+        case Array("#dv", path, idxs) => dv += path -> idxs.split(",").map(_.toLong).toSeq
+        case Array("#touch", part) => touched += part
+        case Array("#kind", k) => kind = k
+        case _ =>
+      }
+      else if (checkpoint) {
+        val Array(part, path) = l.split("\t", 2)
+        ops += '+' -> TxFile(path, part)
+      } else {
+        val Array(op, part, path) = l.split("\t", 3)
+        ops += op.head -> TxFile(path, part)
+      }
+    }
+    Delta(DataType.fromJson(lines.head).asInstanceOf[StructType], kind,
+      ops.result(), dv.result(), touched.result())
+  }
+
+  private def readDelta(v: Long): Delta = readLog(deltaPath(v), checkpoint = false)
+
+  /** The parsed deltas of `(sinceV, untilV]` (`untilV` < 0: up to the
+    * current version), with the range's end version. */
+  private def deltasSince(sinceV: Long, untilV: Long): (Long, Seq[Delta]) = {
+    val to = if (untilV < 0) version else untilV
+    require(to >= 0, s"no committed version to read changes from")
+    require(sinceV >= -1 && sinceV <= to,
+      s"changes range ($sinceV, $to] is empty-backwards")
+    (to, ((sinceV + 1) to to).map(readDelta))
   }
 
   /** DataFrame over the latest snapshot (partition column recovered
@@ -232,12 +262,13 @@ class TxTable(val spark: SparkSession, val root: String,
     }
 
   /** Change feed: the rows APPENDED after version `sinceV`, up to
-    * `untilV` (default: current) — read from only the delta-log's `+`
-    * files of that version range, never by scanning or diffing table
-    * contents. This is what makes incremental consumers (aggregate
-    * refresh, downstream sync, a training-data freshness pass) O(new
-    * data) instead of O(table): a 10-second append cadence at 100 TB
-    * means the feed reads megabytes while the table holds terabytes.
+    * `untilV` (default: current) — read from only the net-new files
+    * the deltas of that version range name, never by scanning or
+    * diffing table contents. This is what makes incremental consumers
+    * (aggregate refresh, downstream sync, a training-data freshness
+    * pass) O(new data) instead of O(table): a 10-second append cadence
+    * at 100 TB means the feed reads megabytes while the table holds
+    * terabytes.
     *
     * Contribution is decided PER FILE by the delta op letter, not per
     * commit: `n` files hold rows never committed before — append
@@ -259,71 +290,41 @@ class TxTable(val spark: SparkSession, val root: String,
     * cover the feed consumer's lag, the same horizon contract as time
     * travel.
     *
-    * The files are read under the schema recorded by the range's last
-    * delta, the same rule as [[readSnapshot]]: a file written before an
-    * additive evolution reads the new columns as null, and building the
-    * frame runs no footer-inference job.
+    * The files are the range's [[TxTable.Delta.netNew]] files, read
+    * under the schema recorded by the range's last delta — the same
+    * rule as [[readSnapshot]]: a file written before an additive
+    * evolution reads the new columns as null, and building the frame
+    * runs no footer-inference job. Only an empty range (`sinceV` =
+    * `untilV`) replays a snapshot, for its schema. `sinceV` = -1
+    * bootstraps the feed from the table's first commit.
     */
   def readChangesSince(sinceV: Long, untilV: Long = -1L): DataFrame = {
-    val to = if (untilV < 0) version else untilV
-    require(to >= 0, s"no committed version to read changes from")
-    require(sinceV >= -1 && sinceV <= to,
-      s"changes range ($sinceV, $to] is empty-backwards")
-    // sinceV = -1 bootstraps the feed from the table's first commit
-    var schema: StructType = if (sinceV >= 0) snapshot(sinceV).schema else null
-    val added = scala.collection.mutable.LinkedHashSet.empty[TxFile]
-    ((sinceV + 1) to to).foreach { i =>
-      val lines = readLogFile(deltaPath(i))
-      schema = DataType.fromJson(lines.head).asInstanceOf[StructType]
-      val kind = lines.tail.find(_.startsWith("#kind\t"))
-        .map(_.split("\t", 2)(1)).getOrElse("append")
-      lines.tail.filter(l => l.nonEmpty && !l.startsWith("#")).foreach { l =>
-        val Array(op, part, path) = l.split("\t", 3)
-        if (op == "n" || (op == "+" && kind == "append")) added += TxFile(path, part)
-      }
-    }
+    val (to, deltas) = deltasSince(sinceV, untilV)
+    val schema = deltas.lastOption.fold(snapshot(to).schema)(_.schema)
+    val added = deltas.flatMap(_.netNew).distinct
     if (added.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     else
       spark.read.option("basePath", root)
         .schema(schema)
-        .parquet(added.toSeq.map(f => s"$root/${f.path}"): _*)
+        .parquet(added.map(f => s"$root/${f.path}"): _*)
   }
 
   /** The update marker that completes [[readChangesSince]]'s contract:
     * partitions whose PREVIOUSLY-COMMITTED content was reshaped or
     * removed by a commit in `(sinceV, untilV]` — rewrites, upserting
-    * rewrites, compactions, cascade deletes — i.e. the partitions an
-    * update-aware consumer must re-read because the row-insert feed
-    * deliberately does not re-deliver their changed values. Append
-    * and insertIgnore commits never appear here (their `n` files are
-    * net-new and already delivered by the feed). O(deltas in range)
-    * log text, no data I/O.
+    * rewrites, compactions, updates, merges, deletes — i.e. the
+    * partitions an update-aware consumer must re-read because the
+    * row-insert feed deliberately does not re-deliver their changed
+    * values. It is the union of the range's
+    * [[TxTable.Delta.reshaped]] partitions: `+`/`-` ops and `#touch`
+    * lines of every non-`append` delta. Append and insertIgnore
+    * commits never appear here (their `n` files are net-new and
+    * already delivered by the feed). O(deltas in range) log text, no
+    * data I/O.
     */
-  def changedPartitionsSince(sinceV: Long, untilV: Long = -1L): Set[String] = {
-    val to = if (untilV < 0) version else untilV
-    require(to >= 0, s"no committed version to read changes from")
-    require(sinceV >= -1 && sinceV <= to,
-      s"changes range ($sinceV, $to] is empty-backwards")
-    val parts = scala.collection.mutable.LinkedHashSet.empty[String]
-    ((sinceV + 1) to to).foreach { i =>
-      val lines = readLogFile(deltaPath(i))
-      val kind = lines.tail.find(_.startsWith("#kind\t"))
-        .map(_.split("\t", 2)(1)).getOrElse("append")
-      if (kind != "append") {
-        lines.tail.filter(l => l.nonEmpty && !l.startsWith("#")).foreach { l =>
-          val Array(op, part, _) = l.split("\t", 3)
-          if (op == "+" || op == "-") parts += part
-        }
-        // delete commits touch no files but change prior content —
-        // their partitions arrive via #touch meta lines
-        lines.tail.filter(_.startsWith("#touch\t")).foreach { l =>
-          parts += l.split("\t", 2)(1)
-        }
-      }
-    }
-    parts.toSet
-  }
+  def changedPartitionsSince(sinceV: Long, untilV: Long = -1L): Set[String] =
+    deltasSince(sinceV, untilV)._2.flatMap(_.reshaped).toSet
 
   // ------------------------------------------------- file-stat skipping
 
@@ -551,14 +552,13 @@ class TxTable(val spark: SparkSession, val root: String,
     * primitive — the moral equivalent of the reference's
     * `INSERT ... ON CONFLICT DO UPDATE` transaction
     * (fetchers/config/queries.py:6-18) at partition granularity.
+    * It is [[upsertRewritePartitions]] with every row tagged `u`, so
+    * the commit holds only reshaped `+` files (kind `rewrite`).
     */
   def rewritePartitions(parts: Set[String], maxAttempts: Int = 20)
                        (compute: DataFrame => DataFrame): Long =
-    withConflictRetry(maxAttempts) { () =>
-      val (v, cur) = snapshotPartitions(parts)
-      val result = compute(cur.getOrElse(uncommitted("rewritePartitions")))
-      val staged = stageInto(parts, result, s"rewritePartitions($parts)")
-      commitRewrite(v, parts, staged, result.schema)
+    upsertRewritePartitions(parts, maxAttempts) { cur =>
+      compute(cur).withColumn(TagCol, org.apache.spark.sql.functions.lit("u"))
     }
 
   /** The shared optimistic-retry scaffold of every partition-scoped
@@ -594,9 +594,6 @@ class TxTable(val spark: SparkSession, val root: String,
     }
   }
 
-  private def uncommitted(op: String): Nothing =
-    throw new IllegalStateException(s"$op on uncommitted table $root")
-
   /** [[stage]] + the partition-containment guard every partition-
     * scoped commit requires: staged files outside `parts` would
     * bypass the conflict check other writers rely on.
@@ -613,37 +610,29 @@ class TxTable(val spark: SparkSession, val root: String,
       s"$op produced rows outside those partitions: ${bad.map(_.partition).distinct}")
   }
 
-  /** Throw [[TxConflictException]] if any commit in (readVersion, v]
-    * changed a file inside `parts` — the shared optimistic-concurrency
-    * check of every partition-scoped commit.
+  /** Throw [[TxConflictException]] iff some delta in (readVersion, v]
+    * has a file op or a `#touch` line inside `parts` — the shared
+    * optimistic-concurrency check of every partition-scoped commit,
+    * read off the deltas alone. A deleteWhere commit changes content
+    * without a file op; its `#touch` lines (written for every
+    * partition it marks, [[commitDvOps]]) make it conflict like a file
+    * change, so a rewrite computed before the delete cannot
+    * materialize the deleted rows. Commits that cancel each other out
+    * still conflict; the loser just recomputes. A range vacuum has
+    * pruned cannot be shown disjoint, so it conflicts too.
     */
-  private def conflictCheck(readVersion: Long, v: Long, parts: Set[String],
-                            base: Seq[TxFile]): Unit =
-    if (v != readVersion) {
-      val beforeSnap =
-        if (readVersion < 0) Snapshot(-1, null, Seq.empty) else snapshot(readVersion)
-      val before = beforeSnap.files.toSet
-      val after = base.toSet
-      val changed = (before diff after) ++ (after diff before)
-      changed.find(f => parts.contains(f.partition)).foreach { f =>
+  private def conflictCheck(readVersion: Long, v: Long, parts: Set[String]): Unit =
+    try ((readVersion + 1) to v).iterator
+      .map(i => i -> (readDelta(i).partitions & parts))
+      .find(_._2.nonEmpty)
+      .foreach { case (i, hit) =>
         throw new TxConflictException(
-          s"partition ${f.partition} changed by a commit after v$readVersion (saw v$v)")
+          s"partitions ${hit.toSeq.sorted.mkString(", ")} changed by v$i, " +
+            s"a commit after v$readVersion")
       }
-      // a deleteWhere commit changes CONTENT without touching files —
-      // a rewrite computed from the pre-delete snapshot would
-      // materialize the resurrected rows, so vector changes inside
-      // `parts` conflict exactly like file changes
-      val dvAfter = snapshot(v).dv
-      if (beforeSnap.dv != dvAfter) {
-        val partByPath = (before ++ after).map(f => f.path -> f.partition).toMap
-        (beforeSnap.dv.keySet ++ dvAfter.keySet)
-          .filter(p => beforeSnap.dv.get(p) != dvAfter.get(p))
-          .find(p => partByPath.get(p).exists(parts.contains))
-          .foreach { p =>
-            throw new TxConflictException(
-              s"deletion vectors on $p changed by a commit after v$readVersion (saw v$v)")
-          }
-      }
+    catch {
+      case _: java.io.FileNotFoundException =>
+        throw new TxConflictException(s"log pruned past v$readVersion (now v$v)")
     }
 
   /** Low-level rewrite commit: replaces the files of `parts` with
@@ -656,7 +645,7 @@ class TxTable(val spark: SparkSession, val root: String,
                     adds: Seq[TxFile], schema: StructType,
                     freshAdds: Seq[TxFile] = Seq.empty): Long =
     retryCas(if (freshAdds.isEmpty) "rewrite" else "upsert") { snap =>
-      conflictCheck(readVersion, snap.version, parts, snap.files)
+      conflictCheck(readVersion, snap.version, parts)
       (adds, freshAdds, snap.files.filter(f => parts.contains(f.partition)), schema)
     }
 
@@ -670,7 +659,7 @@ class TxTable(val spark: SparkSession, val root: String,
   private def commitUpsert(readVersion: Long, parts: Set[String],
                    freshAdds: Seq[TxFile], schema: StructType): Long =
     retryCas("upsert") { snap =>
-      conflictCheck(readVersion, snap.version, parts, snap.files)
+      conflictCheck(readVersion, snap.version, parts)
       (Seq.empty, freshAdds, Seq.empty, mergedSchema(snap, schema))
     }
 
@@ -749,7 +738,8 @@ class TxTable(val spark: SparkSession, val root: String,
                              (compute: DataFrame => DataFrame): Long =
     withConflictRetry(maxAttempts) { () =>
       val (v, cur) = snapshotPartitions(parts)
-      val tagged = compute(cur.getOrElse(uncommitted("upsertRewritePartitions")))
+      val tagged = compute(cur.getOrElse(throw new IllegalStateException(
+        s"upsertRewritePartitions on uncommitted table $root")))
       val staged = stageSplit(tagged, TagCol)
       val op = s"upsertRewritePartitions($parts)"
       require(staged.keySet.subsetOf(Set("u", "n")),
@@ -899,8 +889,9 @@ class TxTable(val spark: SparkSession, val root: String,
   /** CAS-commit a deletion-vector delta: `#dv` lines carry the new
     * (file, indexes) marks, optional `reshaped` files land as `+`
     * ops (updated replacement rows — skipped by the insert feed),
-    * `#touch` lines name the partitions for update-aware consumers.
-    * Conflict-checked like a rewrite.
+    * `#touch` lines name every touched partition — for update-aware
+    * consumers and for [[conflictCheck]], which sees a pure delete
+    * only through them. Conflict-checked like a rewrite.
     */
   private def commitDvOps(readVersion: Long,
                           adds: Seq[(TxFile, Seq[Long])],
@@ -913,7 +904,7 @@ class TxTable(val spark: SparkSession, val root: String,
     val meta = adds.map { case (f, idxs) => s"#dv\t${f.path}\t${idxs.mkString(",")}" } ++
       parts.toSeq.sorted.map(p => s"#touch\t$p")
     retryCas(kind, meta) { snap =>
-      conflictCheck(readVersion, snap.version, parts, snap.files)
+      conflictCheck(readVersion, snap.version, parts)
       // a widened merge batch evolves the schema additively, exactly
       // like append (a silently-narrowed batch would drop its columns)
       (reshaped, fresh, Seq.empty, batchSchema.fold(snap.schema)(mergedSchema(snap, _)))
@@ -1180,12 +1171,12 @@ class TxTable(val spark: SparkSession, val root: String,
       val v = version
       val (reshaped, fresh, removes, schema) =
         build(if (v < 0) Snapshot(-1, null, Seq.empty) else snapshot(v))
-      // '#'-prefixed metadata lines are skipped by every op-line
-      // parser. The op letter carries the content provenance the
-      // change feed needs: `n` files hold rows never committed before
-      // (append batches, upsert inserts); `+` files hold previously-
-      // committed rows reshaped (rewrite/compact). `kind` names the
-      // commit path for operators/debugging.
+      // readLog parses this body back. The op letter carries the
+      // content provenance the change feed needs: `n` files hold rows
+      // never committed before (append batches, upsert inserts); `+`
+      // files hold previously-committed rows reshaped (rewrite/
+      // compact). `kind` names the commit path; the update marker
+      // reads it.
       val ops = removes.map(f => s"-\t${f.partition}\t${f.path}") ++
         reshaped.map(f => s"+\t${f.partition}\t${f.path}") ++
         fresh.map(f => s"n\t${f.partition}\t${f.path}")
@@ -1302,6 +1293,31 @@ object TxTable {
     */
   final case class Snapshot(version: Long, schema: StructType, files: Seq[TxFile],
                             dv: Map[String, Seq[Long]] = Map.empty)
+
+  /** One parsed log file ([[TxTable.readLog]]; line format in
+    * [[TxTable]]): the file ops in file order, the `#dv` marks, the
+    * `#touch` partitions, and the `#kind` (`append` when absent).
+    */
+  private[storage] final case class Delta(schema: StructType, kind: String,
+                                          ops: Seq[(Char, TxFile)],
+                                          dv: Seq[(String, Seq[Long])],
+                                          touched: Seq[String]) {
+    /** Files of rows never committed before — what the change feed
+      * delivers: `n` ops, plus the legacy `+` ops of `append` deltas. */
+    def netNew: Seq[TxFile] = ops.collect {
+      case (op, f) if op == 'n' || (op == '+' && kind == "append") => f
+    }
+
+    /** Partitions whose prior content this commit reshaped or removed —
+      * the update marker: the `+`/`-` ops and `#touch` lines of a
+      * non-`append` delta. */
+    def reshaped: Seq[String] =
+      if (kind == "append") Nil
+      else ops.collect { case (op, f) if op != 'n' => f.partition } ++ touched
+
+    /** Every partition this commit touched: file ops and `#touch`. */
+    def partitions: Set[String] = (ops.map(_._2.partition) ++ touched).toSet
+  }
 }
 
 /** A rewrite lost an optimistic-concurrency race: another commit

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.core.Schemas
 
-/** ST8 — the WS fan-out cadence driver: the reference serves each
+/** ST8 — the WS fan-out cadence: the reference serves each
   * subscription from a per-client coroutine that sends the latest
   * candle and sleeps an interval-specific number of seconds
   * (web/routes/api/ws/utils/senders.py:70-120: 1m from the Redis
@@ -10,13 +10,10 @@ import graft.core.Schemas
   * with sleeps 5m→5 s, 15m→15, 30m→30, 1h→60, 6h→360, 12h→720,
   * 1D→1440, 7D→10080 — uniformly `interval_seconds / 60`).
   *
-  * The engine side of ST8 was always the `limit(1)` rollup read
-  * (OhlcvReader with `limit = 1`); this driver adds the cadence loop
-  * with injectable fetch/send/sleep so the schedule is testable
-  * without wall-clock waits. One [[tick]]-loop per subscription is
-  * the reference's one-coroutine-per-subscription model; at scale
-  * these are API-layer threads issuing sub-second cached reads
-  * (QueryCache), not cluster work.
+  * The fetch-send loop is [[graft.api.OhlcvHttpServer]]'s: one
+  * fixed-rate task per subscription reads the latest candle
+  * (`limit = 1`) and pushes it, sending nothing when the read is
+  * empty. This object holds only the cadence table it schedules by.
   */
 object CadenceSender {
 
@@ -30,23 +27,4 @@ object CadenceSender {
     Schemas.intervalSeconds.get(interval)
       .map(s => math.max(1L, s / 60L))
       .getOrElse(10080L)
-
-  final case class Subscription(exchange: String, baseId: String,
-                                quoteId: String, interval: String)
-
-  /** Run `ticks` send cycles for one subscription: fetch the latest
-    * candle (None = no data yet — nothing is sent, matching the
-    * reference's `if data:` guard), send it, sleep the cadence.
-    */
-  def run[T](sub: Subscription, ticks: Int,
-             fetchLatest: Subscription => Option[T],
-             send: (Subscription, T) => Unit,
-             sleeper: Long => Unit = s => Thread.sleep(s * 1000)): Unit = {
-    var i = 0
-    while (i < ticks) {
-      fetchLatest(sub).foreach(send(sub, _))
-      sleeper(cadenceSecs(sub.interval))
-      i += 1
-    }
-  }
 }

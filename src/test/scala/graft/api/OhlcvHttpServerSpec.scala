@@ -24,10 +24,14 @@ class OhlcvHttpServerSpec extends SparkSpec {
   }.toDF("time", "exchange", "base_id", "quote_id",
     "open", "high", "low", "close", "volume")
 
+  // base ids whose fetch has returned, in completion order
+  private val fetched = new LinkedBlockingQueue[String]()
+
   private def withServer(body: OhlcvHttpServer => Unit): Unit = {
     val asOf = new java.sql.Timestamp(t0 + 3600000L)
+    val read = OhlcvHttpServer.forSpark(spark, base(), Map.empty, asOf)
     val srv = new OhlcvHttpServer(
-      OhlcvHttpServer.forSpark(spark, base(), Map.empty, asOf),
+      p => { val rows = read(p); fetched.put(p.baseId); rows },
       cadenceMsOverride = Some(150L)).start()
     try body(srv) finally srv.stop()
   }
@@ -109,6 +113,16 @@ class OhlcvHttpServerSpec extends SparkSpec {
       // pushes stop: drain then require silence for > 3 cadences
       Thread.sleep(300); msgs.clear(); Thread.sleep(500)
       assert(msgs.isEmpty, "pushes must stop after unsubscribe")
+      // a key with no rows is fetched at cadence and never pushed
+      def ethFetches = fetched.toArray.count(_ == "ETH")
+      ws.sendText(
+        """{"event_type":"subscribe","data_type":"ohlcv","exchange":"bitfinex",
+          |"base_id":"ETH","quote_id":"USD","interval":"1m","mls":true}""".stripMargin,
+        true)
+      val emptyDeadline = System.nanoTime() + 10L * 1000000000L
+      while (ethFetches < 3 && System.nanoTime() < emptyDeadline) Thread.sleep(50)
+      assert(ethFetches >= 3, "the empty key must still be fetched at cadence")
+      assert(msgs.isEmpty, s"an empty fetch must send nothing, got ${msgs.peek()}")
       ws.sendClose(WebSocket.NORMAL_CLOSURE, "done")
     }
   }

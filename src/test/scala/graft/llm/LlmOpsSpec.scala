@@ -28,18 +28,6 @@ class LlmOpsSpec extends SparkSpec {
     assert(!pairs.exists(p => p._1 == 4L || p._2 == 4L))
   }
 
-  test("minHashNearDupsFactored produces identical pairs and jaccards to the fused form") {
-    val withSh = docs.withColumn("sh",
-      TextOps.wordNgrams(TextOps.words(col("text")), 3))
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("id_a", "id_b").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    val fused = rows(Dedup.minHashNearDups(withSh, col("doc_id"), col("sh"), 8, 2, 0.3))
-    val factored = rows(Dedup.minHashNearDupsFactored(withSh, col("doc_id"), col("sh"), 8, 2, 0.3))
-    assert(fused == factored)
-    assert(fused.nonEmpty)
-  }
-
   test("minHashCandidates: exact-dup pair always a candidate; no self pairs") {
     val withSh = docs.select(col("doc_id").as("id"),
       explode(array_distinct(TextOps.charNgrams(col("text"), 5))).as("s"))

@@ -41,6 +41,10 @@ class MemObjectStoreTxSpec extends SparkSpec {
     t.vacuum(retainVersions = 2, retainAgeMillis = 0L)
     assert(t.snapshot(t.version).files.map(_.path) === Seq(f(1000).path))
     intercept[Exception] { t.snapshot(0) } // pruned past the horizon
+    // a commit read below the horizon cannot be shown disjoint: conflict
+    intercept[TxConflictException] {
+      t.commitRewrite(3L, Set("2099-12-31"), Seq.empty, schema)
+    }
     assert(MemObjectStore.renames.get() === 0,
       "commit protocol must never rename on an object store")
   }

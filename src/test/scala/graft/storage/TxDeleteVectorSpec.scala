@@ -59,6 +59,18 @@ class TxDeleteVectorSpec extends SparkSpec {
     intercept[TxConflictException] {
       t.commitRewrite(staleV, Set("a"), staleFiles, t.read().schema)
     }
+    // a delete in another partition leaves the rewrite's input intact:
+    // it commits on the first attempt
+    t.append((31L to 40L).map(i => (i, "b")).toDF("id", "p_date"))
+    var attempts = 0
+    t.rewritePartitions(Set("a")) { cur =>
+      attempts += 1
+      if (attempts == 1) t.deleteWhere(col("id") === 40L)
+      cur.coalesce(1)
+    }
+    assert(attempts === 1, "a delete in partition b must not conflict with a rewrite of a")
+    assert(t.read().select("id").as[Long].collect().sorted.toSeq ===
+      (2L to 39L).toSeq)
   }
 
   test("vectors survive checkpoints and vacuum via the horizon checkpoint") {

@@ -10,9 +10,9 @@ import org.apache.spark.sql.functions._
 class TxTableSpec extends SparkSpec {
   import graft.SparkSpec.spark.implicits._
 
-  private def freshTable(): TxTable = {
+  private def freshTable(ck: Int = 10): TxTable = {
     val dir = java.nio.file.Files.createTempDirectory("txtable").toString
-    new TxTable(spark, dir)
+    new TxTable(spark, dir, checkpointInterval = ck)
   }
 
   private def rows(ids: Range, date: String) =
@@ -156,17 +156,22 @@ class TxTableSpec extends SparkSpec {
   }
 
   test("changedPartitionsSince marks rewrites/compactions, never appends") {
-    val t = freshTable()
+    val t = freshTable(ck = 3)
     t.append(rows(0 until 5, "2021-01-01"))             // v0
     t.append(rows(5 until 8, "2021-01-02"))             // v1
     assert(t.changedPartitionsSince(-1) === Set.empty)
     t.rewritePartitions(Set("2021-01-02")) { df =>      // v2 reshapes
       df.filter(col("id") =!= 5L)
     }
-    t.append(rows(100 until 103, "2021-01-03"))         // v3
+    t.append(rows(100 until 103, "2021-01-03"))         // v3, a checkpoint
     assert(t.changedPartitionsSince(-1) === Set("2021-01-02"))
     assert(t.changedPartitionsSince(2) === Set.empty,
       "range after the rewrite sees only the append")
+    t.deleteWhere(col("id") === 101L)                   // v4: #dv + #touch only
+    assert(t.changedPartitionsSince(2) === Set("2021-01-03"),
+      "a delete marks its partition through #touch, across the v3 checkpoint")
+    assert(t.changedPartitionsSince(-1) === Set("2021-01-02", "2021-01-03"))
+    assert(t.changedPartitionsSince(1, 3) === Set("2021-01-02"))
   }
 
   test("empty table reads as empty DataFrame after a zero-row commit") {

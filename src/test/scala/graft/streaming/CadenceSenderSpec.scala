@@ -19,17 +19,4 @@ class CadenceSenderSpec extends AnyFunSuite {
     // calendar intervals cap at the weekly cadence
     assert(cadenceSecs("1M") == 10080L)
   }
-
-  test("run loop: fetch-send-sleep per tick; empty fetches send nothing") {
-    val sub = Subscription("bitfinex", "BTC", "USD", "1h")
-    val sleeps = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val sent = scala.collection.mutable.ArrayBuffer.empty[String]
-    var calls = 0
-    CadenceSender.run[String](sub, ticks = 4,
-      fetchLatest = _ => { calls += 1; if (calls == 2) None else Some(s"candle$calls") },
-      send = (_, c) => sent += c,
-      sleeper = sleeps += _)
-    assert(sleeps.toSeq == Seq(60L, 60L, 60L, 60L))
-    assert(sent.toSeq == Seq("candle1", "candle3", "candle4"), "None ticks skip the send")
-  }
 }
